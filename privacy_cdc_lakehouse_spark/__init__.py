@@ -6,7 +6,7 @@ Spark → Iceberg → Trino), re-expressed Spark-first:
 
 - Medallion pipeline (bronze raw CDC → silver latest-state → privacy
   projection) on a Parquet-backed lake table layer with MERGE semantics
-  (``tables.py``; uses Delta Lake transparently when its jar is present).
+  (``tables.py``).
 - The analytic query surface (joins, aggregations, windows, set ops)
   as plain DataFrame/SQL plans optimized by Catalyst + AQE.
 - Structured Streaming ingestion with ``foreachBatch`` merge, watermarks

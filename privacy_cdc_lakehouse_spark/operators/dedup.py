@@ -536,7 +536,7 @@ def allpairs_candidates(
         # recompute over storage can drop this line without changing
         # results. With ``shingle_col`` the CALLER owns
         # materialization (it is sharing the frame across stages).
-        sh = sh.localCheckpoint(eager=False)
+        sh = checkpoint_df(sh, eager=False)
     post = sh.select("_id", "s", F.explode("sh").alias("tok"))
     dfreq = post.groupBy("tok").agg(F.count(F.lit(1)).alias("_df"))
     w = Window.partitionBy("_id").orderBy("_df", "tok")
@@ -1087,7 +1087,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected pair list → (id,
     component) with component = min id in the component.
@@ -1121,26 +1120,11 @@ def connected_components(
     fixpoint — every node labeled with its component's min id — is
     the same, compression only changes how fast labels travel).
 
-    ``checkpoint_dir`` — per-iteration materialization strategy. The
-    default (None) uses ``localCheckpoint``: executor-local blocks,
-    right for local[32] and zero-config. On a real cluster an executor
-    loss mid-loop is fatal under localCheckpoint (truncated lineage
-    cannot recompute lost blocks), so the 100 TB path passes a
-    reliable directory (HDFS/S3) and gets fault-tolerant
-    ``checkpoint()`` snapshots instead — the GraphFrames
-    ``setCheckpointDir`` pattern (round-10 hardening).
+    The edge list and each round's labels are materialized with an
+    eager ``checkpoint_df``: executor-local by default, a reliable
+    snapshot that survives executor loss under
+    ``spark.graft.reliableIntermediates=true``.
     """
-    if checkpoint_dir is not None:
-        spark = pairs.sparkSession
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _materialize(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _materialize(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     edges = (
         # both directions from ONE pass over pairs (a union of two
         # selects would execute the upstream pair pipeline twice)
@@ -1166,7 +1150,7 @@ def connected_components(
         # corpus — so materializing it is the standard iterative-graph
         # move (GraphFrames does the same before its CC loop).
     )
-    edges = _materialize(edges)
+    edges = checkpoint_df(edges, eager=True)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1198,7 +1182,8 @@ def connected_components(
                 F.least("_root", "component"), F.col("component")
             ).alias("component"),
         )
-        new_labels = _materialize(compressed)  # truncate lineage per round
+        # truncate lineage per round
+        new_labels = checkpoint_df(compressed, eager=True)
         # convergence check against the MATERIALIZED result (no
         # recompute of the round's join+agg)
         changed = (

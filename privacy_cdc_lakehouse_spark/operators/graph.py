@@ -14,7 +14,7 @@ contributions by ``dst``. Nothing is ever collected to the driver;
 the teleport constant and the dangling-mass redistribution ride
 broadcast 1-row scalar frames (the repo's sanctioned scalar idiom).
 Lineage grows one join+agg per iteration, so ``checkpoint_every``
-truncates it with ``localCheckpoint`` exactly as ``bpe_train`` and
+truncates it with ``checkpoint_df`` exactly as ``bpe_train`` and
 ``mmr_rerank`` do for their driver-round loops.
 
 Determinism/replayability contract: every iteration's rank is rounded
@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from privacy_cdc_lakehouse_spark.operators.util import (
+    checkpoint_df,
     checkpoint_parallel,
     ensure_parallelism,
 )
@@ -212,7 +213,7 @@ def pagerank(
             )
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            rank = rank.localCheckpoint(eager=False)
+            rank = checkpoint_df(rank, eager=False)
     return rank.select("node", "rank", "out_deg")
 
 
@@ -381,7 +382,7 @@ def hits(
     Returns (node, authority, hub). Scale: two |E|-shuffles per
     iteration (one per direction); the L2 norms ride broadcast 1-row
     scalars; never collected. The edge frame is checkpointed once and
-    the state frame once per iteration (LAZY ``localCheckpoint``, the
+    the state frame once per iteration (LAZY ``checkpoint_df``, the
     k_core plan-size discipline — found by the round-14 sf1 gate row:
     one iteration references the previous state ~4x (two propagates,
     each reading its input twice for the norm and the output) and the
@@ -435,7 +436,7 @@ def hits(
     for _ in range(iterations):
         auth = _propagate(state, "hub", "src", "dst", "authority")
         hub = _propagate(auth, "authority", "dst", "src", "hub")
-        state = auth.join(hub, "node").localCheckpoint(eager=False)
+        state = checkpoint_df(auth.join(hub, "node"), eager=False)
     return state.select("node", "authority", "hub")
 
 
@@ -531,7 +532,7 @@ def label_propagation(
     (dst, label)-aggregate and one per-node argmax window whose
     partitions are in-degree-bounded; seeds re-assert by map-side
     coalesce over the |seeds|-sized frame. Edge frame checkpointed
-    once and the label frame once per round (LAZY ``localCheckpoint``
+    once and the label frame once per round (LAZY ``checkpoint_df``
     — each round references the previous labels twice, so an
     un-truncated chain re-derives upstream edge joins 2^R times; the
     round-14 hits lesson applied here, results bit-identical)."""
@@ -571,15 +572,15 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select("node", F.col("label").alias("_new"))
         )
-        lab = (
+        lab = checkpoint_df(
             base.join(lab.select("node", "label"), "node")
             .join(adopted, "node", "left")
             # seeds are immutable; non-seeds adopt the majority or keep
             .select(
                 "node",
                 F.coalesce("_seed", "_new", "label").alias("label"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return lab.select("node", "label")
 
@@ -786,7 +787,7 @@ def clustering_coefficient(
     # edge pipeline (often an expensive fact-fact distinct) must not
     # execute per consumer (round-15: the triangles gate row doubled,
     # 13.3 -> 28.2 s, when this composition first recomputed it)
-    und = und.localCheckpoint(eager=False)
+    und = checkpoint_df(und, eager=False)
     tri = triangles(und, "a", "b", orient)
     deg = (
         und.select(F.col("a").alias("node"))
@@ -922,7 +923,7 @@ def k_core(
     (the degree union twice, the keep set twice, the join probe), so
     an un-truncated R-round chain grows the Catalyst tree as 5^R and
     ANALYSIS — not execution — becomes the bottleneck by R≈6. Every
-    round therefore ends in a LAZY ``localCheckpoint`` (plan truncates
+    round therefore ends in a LAZY ``checkpoint_df`` (plan truncates
     to an RDD scan node immediately; materialization rides the next
     action — the convergence count in the fixpoint path, the caller's
     single action in the pinned path), keeping analysis O(1) per
@@ -963,7 +964,7 @@ def k_core(
     cur = und
     if rounds is not None:
         for _ in range(rounds):
-            cur = peel(cur).localCheckpoint(eager=False)
+            cur = checkpoint_df(peel(cur), eager=False)
         return degrees(cur)
     # ONE 1-row edge-count scalar per round (the sanctioned
     # driver-loop read): a peel that drops no node leaves the edge
@@ -973,7 +974,7 @@ def k_core(
     # peel, never the chain.
     prev_n = None
     while True:
-        cur = peel(cur).localCheckpoint(eager=False)
+        cur = checkpoint_df(peel(cur), eager=False)
         n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
         if n == prev_n or n == 0:
             return degrees(cur)
@@ -1036,7 +1037,7 @@ def core_number(
     edge list). Default (``k_max=None, rounds_per_k=None``) peels each
     level to its FIXPOINT and stops when the graph empties — the exact
     decomposition; reuses :func:`k_core`'s bounded driver loop (ONE
-    1-row convergence scalar per peel, lazy ``localCheckpoint`` per
+    1-row convergence scalar per peel, lazy ``checkpoint_df`` per
     round so the Catalyst tree stays O(1) — the 5^R analysis-blowup
     lesson documented there). Total peels across all levels ≤
     degeneracy + #levels — the same O(tens) bound as one fixpoint
@@ -1092,7 +1093,7 @@ def core_number(
         ).join(keep.select(F.col("node").alias("b")), "b", "left_semi")
 
     cur = und
-    prev_nodes = degrees(cur).select("node").localCheckpoint(eager=False)
+    prev_nodes = checkpoint_df(degrees(cur).select("node"), eager=False)
     assigned: list[DataFrame] = []
     k = 2
     empty = False
@@ -1109,18 +1110,18 @@ def core_number(
     while True:
         if rounds_per_k is not None:
             for _ in range(rounds_per_k):
-                cur = peel(cur, k).localCheckpoint(eager=False)
+                cur = checkpoint_df(peel(cur, k), eager=False)
         else:
             prev_n = carry_n
             while True:
-                cur = peel(cur, k).localCheckpoint(eager=False)
+                cur = checkpoint_df(peel(cur, k), eager=False)
                 n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
                 if n == prev_n or n == 0:
                     empty = n == 0
                     break
                 prev_n = n
             carry_n = n
-        surv = degrees(cur).select("node").localCheckpoint(eager=False)
+        surv = checkpoint_df(degrees(cur).select("node"), eager=False)
         assigned.append(
             prev_nodes.join(surv, "node", "left_anti").select(
                 "node", F.lit(k - 1).cast("long").alias("core")
@@ -1251,7 +1252,7 @@ def k_truss(
     exactly like k-core — and reuses its driver-loop discipline: ONE
     1-row edge-count scalar per round (the carried-count convergence
     seed from the round-14 advice — an already-converged graph costs
-    one support pass, not two), lazy ``localCheckpoint`` per round.
+    one support pass, not two), lazy ``checkpoint_df`` per round.
 
     Returns the truss edges (a, b, support) with support computed on
     the FINAL subgraph (at fixpoint every support >= k-2 — the
@@ -1280,20 +1281,20 @@ def k_truss(
     need = k - 2
     if rounds is not None:
         for _ in range(rounds):
-            cur = (
+            cur = checkpoint_df(
                 _edge_support(cur, orient)
                 .filter(F.col("support") >= need)
-                .select("a", "b")
-                .localCheckpoint(eager=False)
+                .select("a", "b"),
+                eager=False,
             )
     else:
         prev_n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
         while True:
-            cur = (
+            cur = checkpoint_df(
                 _edge_support(cur, orient)
                 .filter(F.col("support") >= need)
-                .select("a", "b")
-                .localCheckpoint(eager=False)
+                .select("a", "b"),
+                eager=False,
             )
             n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
             if n == prev_n or n == 0:

@@ -26,6 +26,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
+
+# Width of the driver thread pool that overlaps pq_model's per-subspace
+# k-means fits. A latency/driver-contention trade, not a semantics knob:
+# each fit is byte-identical regardless of pool width, so centroids are
+# too. Interleaved A/B at sf0.1, m=16: width 4 [3.57, 5.45, 5.55] vs
+# width 8 [3.17, 3.62, 4.52] — 8 won every pairing (the fits are
+# driver-latency-bound, so deeper overlap keeps hiding round trips).
+_PQ_FIT_WORKERS = 8
+
+
 
 def _array_lit(values: list[float]) -> Column:
     """Constant ``array<double>`` literal built from ONE SQL-text parse.
@@ -220,7 +231,7 @@ def mmr_rerank(
     picks = None
     for r in range(1, k + 1):
         if checkpoint_every and r > 1 and (r - 1) % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=True)
+            state = checkpoint_df(state, eager=True)
         scored = state.withColumn("_score", score).withColumn(
             "_rn", F.row_number().over(w)
         )
@@ -1159,20 +1170,9 @@ def pq_model(
             (s, code, vec, m, n_codes, iters, subdim) for code, vec in cents
         ]
 
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
-    # Overlap width is a latency/driver-contention trade, not a
-    # semantics knob (each job is byte-identical regardless of pool
-    # width, so centroids are too — asserted in the round-16 A/B).
-    # Interleaved A/B at sf0.1, m=16: width 4 [3.57, 5.45, 5.55] vs
-    # width 8 [3.17, 3.62, 4.52] — 8 won every pairing (the fits are
-    # driver-latency-bound, so deeper overlap keeps hiding round
-    # trips); env-tunable for cluster profiles.
-    workers = max(
-        1, min(int(os.environ.get("SPARK_GRAFT_PQ_FIT_WORKERS", "8")), m)
-    )
-    with ThreadPoolExecutor(max_workers=workers) as pool:
+    with ThreadPoolExecutor(max_workers=min(_PQ_FIT_WORKERS, m)) as pool:
         per_sub = list(pool.map(fit, range(m)))
     rows = [row for sub_rows in per_sub for row in sub_rows]
     return corpus.sparkSession.createDataFrame(

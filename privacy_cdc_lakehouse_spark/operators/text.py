@@ -551,7 +551,6 @@ def kneser_ney_bigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     discount: float = 0.75,
-    materialize_pairs: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Interpolated Kneser-Ney bigram model (Kneser & Ney 1995; Chen &
     Goodman 1998's standard formulation) — the principled smoothing
@@ -577,16 +576,6 @@ def kneser_ney_bigram_lm(
         "p.w1", "p.w2"
     )
     bigrams = p.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-    if materialize_pairs:
-        # All three artifacts (and a consumer's three joins) derive
-        # from this one bigram-vocabulary-sized aggregate; without
-        # materialization a single scoring query re-executes the pair
-        # explode+agg ~4× (contexts, types, cont, join side). Counts
-        # are integers, so every derived quantity is bit-identical
-        # (round-16; pinned by test_kneser_ney_materialize_parity).
-        from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
-
-        bigrams = checkpoint_df(bigrams)
     contexts = bigrams.groupBy("w1").agg(
         F.sum("n12").alias("n1"), F.count(F.lit(1)).alias("_n1p")
     ).select(

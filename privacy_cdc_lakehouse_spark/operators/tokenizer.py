@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
+
 SEP = "\x1f"
 EOW = "</w>"
 
@@ -233,7 +235,7 @@ def bpe_train(
     round_i = 0
     while len(merges) < num_merges:
         if checkpoint_every and round_i and round_i % checkpoint_every == 0:
-            wf = wf.localCheckpoint(eager=True)
+            wf = checkpoint_df(wf, eager=True)
         round_i += 1
         want = min(batch_size, num_merges - len(merges))
         syms = _symbols(F.col("repr"))
@@ -361,7 +363,7 @@ def bpe_train(
                 # the round-14 gate showed un-materialized chains
                 # multiplying through the 64 independent delta
                 # expressions; results are bit-identical
-                wf = wf.localCheckpoint(eager=True)
+                wf = checkpoint_df(wf, eager=True)
     vocab = wf.select("word", _symbols(F.col("repr")).alias("tokens"))
     return merges, vocab
 

@@ -6,28 +6,14 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from privacy_cdc_lakehouse_spark.session import _session_stopped
+
 # (session-object-id, slot) -> (session, persisted df). Guarded by
 # _PERSIST_LOCK; entries from stopped sessions are purged on every
 # call so a torn-down session's plan is never pinned past the next
 # slot_persist anywhere in the process.
 _PERSIST_SLOTS: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
 _PERSIST_LOCK = threading.Lock()
-
-
-def _session_stopped(sess) -> bool:
-    """True only when the session is POSITIVELY known stopped. A
-    backend without the classic ``_sc._jsc`` internals (Spark Connect)
-    must answer "alive", not "stopped" — answering "stopped" there
-    made every lookup purge the whole memo, silently disabling it
-    (round-16 advisor item)."""
-    sc = getattr(sess, "_sc", None)
-    if sc is not None:
-        try:
-            return sc._jsc is None  # SparkContext.stop() nulls _jsc
-        except Exception:
-            return False
-    stopped = getattr(sess, "is_stopped", None)  # Connect exposes this
-    return bool(stopped) if isinstance(stopped, bool) else False
 
 
 def slot_persist(df: DataFrame, slot: str) -> DataFrame:
@@ -67,36 +53,48 @@ def slot_persist(df: DataFrame, slot: str) -> DataFrame:
 
 
 def checkpoint_df(df: DataFrame, eager: bool = True) -> DataFrame:
-    """The engine's single "materialize this intermediate" primitive.
+    """The engine's single "materialize this intermediate" primitive:
+    every lineage-truncating materialization in the package (iterative
+    loop spines, dedup shingle and candidate frames, connected-
+    components edges and labels, BPE/WordPiece dictionaries, top-k
+    candidate state) goes through this function, and no other module
+    calls ``localCheckpoint``/``checkpoint`` (a source-scanning test
+    pins that).
 
     Default: ``localCheckpoint`` — blocks live on executors with
     lineage truncated, the right trade locally and the cheapest one
     anywhere. At cluster scale executor loss (spot nodes, dynamic
     deallocation) makes a local checkpoint unrecoverable, so the
-    posture is CONFIG-GATED (round-15 verdict item): set
-    ``spark.graft.reliableIntermediates=true`` (plus
-    ``sparkContext.setCheckpointDir`` — required by Spark for reliable
-    checkpoints) and every intermediate materialization in the engine
-    (loop spines, dedup candidate frames, shared panel sub-results)
-    switches to a reliable ``checkpoint()`` that survives executor
-    loss. Values are identical either way — only the storage home of
-    the one materialization changes."""
+    posture is CONFIG-GATED: with
+    ``spark.graft.reliableIntermediates=true`` every one of those
+    materializations becomes a reliable ``checkpoint()`` that survives
+    executor loss. Spark needs ``sparkContext.setCheckpointDir`` for
+    that; when the flag is on and no directory is set this raises
+    ``ValueError`` at the call instead of failing deep inside the
+    first query. Values are identical either way — only the storage
+    home of the materialization changes."""
+    spark = df.sparkSession
     try:
         reliable = (
-            df.sparkSession.conf.get(
-                "spark.graft.reliableIntermediates", "false"
-            ).lower()
+            spark.conf.get("spark.graft.reliableIntermediates", "false").lower()
             == "true"
         )
     except Exception:
         reliable = False
-    if reliable:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    if not reliable:
+        return df.localCheckpoint(eager=eager)
+    sc = getattr(spark, "_sc", None)  # None on Spark Connect
+    if sc is not None and sc.getCheckpointDir() is None:
+        raise ValueError(
+            "spark.graft.reliableIntermediates=true needs a checkpoint "
+            "directory: call sparkContext.setCheckpointDir(<shared dir>) "
+            "or unset spark.graft.reliableIntermediates"
+        )
+    return df.checkpoint(eager=eager)
 
 
 def checkpoint_parallel(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` + guaranteed ``defaultParallelism``
+    """Eager :func:`checkpoint_df` + guaranteed ``defaultParallelism``
     partitions — the loop-spine materialization for iterative
     operators.
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
 from privacy_cdc_lakehouse_spark.session import pin_utc
 
 
@@ -2403,8 +2404,8 @@ def q_cc_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # edges consumed twice (the CC loop seeds from them AND the
     # fixpoint-violation join re-reads them) — materialize once
-    pairs = chain.unionByName(head).localCheckpoint(eager=False)
-    comp = dd.connected_components(pairs).localCheckpoint(eager=False)
+    pairs = checkpoint_df(chain.unionByName(head), eager=False)
+    comp = checkpoint_df(dd.connected_components(pairs), eager=False)
     viol = (
         pairs.join(
             comp.select(

@@ -23,6 +23,7 @@ from privacy_cdc_lakehouse_spark.operators import dedup as dd
 from privacy_cdc_lakehouse_spark.operators import multimodal as mm
 from privacy_cdc_lakehouse_spark.operators import similarity as sim
 from privacy_cdc_lakehouse_spark.operators import text as tx
+from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
 from privacy_cdc_lakehouse_spark.session import pin_utc
 from privacy_cdc_lakehouse_spark.sources.fixtures import load_table
 
@@ -30,37 +31,6 @@ NUM_PERM = 16
 BANDS = 4
 ROWS_PER_BAND = NUM_PERM // BANDS
 NEAR_DUP_TAIL = " near dup tail marker"
-
-
-def _tqp_share_on() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_TQP_SHARE", "0") == "1"
-
-
-def _tqp_share(df: DataFrame) -> DataFrame:
-    """Within-query sharing experiment for text_quality_panel's
-    multiply-consumed sub-results (round-16, the r15 verdict's #1
-    A/B). Hypothesis: the union re-executes ``unigram_lm(docs)`` up to
-    6× per collect (lm + ppl + dsir arms, plus each consumer's
-    join-side + floor-agg double reference), so one ``checkpoint_df``
-    per shared frame should win. MEASURED RESULT: it LOSES — default
-    OFF. Interleaved A/B, identical rows asserted: sf0.1 medians
-    34.1 s (off) vs 39.5 s (on), 8 samples each; sf1 240.8 s (off) vs
-    327.5 s (on). AQE's runtime exchange/stage reuse ALREADY
-    deduplicates the identical sub-plans inside the single collect
-    (collect time was flat in every pairing — e.g. sf1 ~240 s both
-    ways); the eager checkpoints only ADD ~8 serial materialization
-    barriers at build time (+73–105 s at sf1). Plan evidence of the
-    experiment: plans/r16/text_quality_panel_{before,after}.txt
-    (423 → 145 Exchanges, 181 → 34 parquet scans — a smaller plan the
-    runtime already achieved via reuse). SPARK_GRAFT_TQP_SHARE=1
-    re-enables for re-measurement on engines without runtime reuse."""
-    if not _tqp_share_on():
-        return df
-    from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
-
-    return checkpoint_df(df)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1185,8 +1155,8 @@ def q_wordpiece_encode_production(spark: SparkSession, sf_dir: str) -> DataFrame
     merges, vocab = tk.bpe_train(
         wf, num_merges=16, checkpoint_every=8, scoring="wordpiece"
     )
-    pieces = tk.wordpiece_vocab_from_segmentations(vocab).localCheckpoint(
-        eager=False
+    pieces = checkpoint_df(
+        tk.wordpiece_vocab_from_segmentations(vocab), eager=False
     )
     n_pieces = pieces.agg(F.count(F.lit(1)).cast("long").alias("pieces"))
     enc = tk.wordpiece_encode(corpus, pieces)
@@ -1302,7 +1272,7 @@ def q_allpairs_exact_production(spark: SparkSession, sf_dir: str) -> DataFrame:
       probabilistic path), while ap_pairs >= lsh_pairs prices what
       LSH's recall < 1 trades away.
 
-    The candidate frames are lazily localCheckpointed so generation is
+    The candidate frames are lazily checkpointed so generation is
     priced ONCE (each feeds both its count and the verify stage); the
     verify joins and the anti-join stay live in the captured plan
     (broadcast-hinted candidate semi-joins — nothing may cartesian).
@@ -1319,19 +1289,21 @@ def q_allpairs_exact_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times); the verified frames are checkpointed too because each is
     # consumed twice (its count + the anti-join) — without that the
     # shingle-intersect verify joins execute twice (~30 s more).
-    sdocs = docs.withColumn("sh", dd.shingles(F.col("text"))).localCheckpoint(
-        eager=False
+    sdocs = checkpoint_df(
+        docs.withColumn("sh", dd.shingles(F.col("text"))), eager=False
     )
-    cand = dd.allpairs_candidates(
-        sdocs, t, shingle_col="sh"
-    ).localCheckpoint(eager=False)
-    ap = dd.ngram_jaccard_pairs(
-        sdocs, cand, threshold=t, shingle_col="sh"
-    ).localCheckpoint(eager=False)
-    lsh_cand = dd.minhash_lsh_pairs(docs).localCheckpoint(eager=False)
-    lsh = dd.ngram_jaccard_pairs(
-        sdocs, lsh_cand, threshold=t, shingle_col="sh"
-    ).localCheckpoint(eager=False)
+    cand = checkpoint_df(
+        dd.allpairs_candidates(sdocs, t, shingle_col="sh"), eager=False
+    )
+    ap = checkpoint_df(
+        dd.ngram_jaccard_pairs(sdocs, cand, threshold=t, shingle_col="sh"),
+        eager=False,
+    )
+    lsh_cand = checkpoint_df(dd.minhash_lsh_pairs(docs), eager=False)
+    lsh = checkpoint_df(
+        dd.ngram_jaccard_pairs(sdocs, lsh_cand, threshold=t, shingle_col="sh"),
+        eager=False,
+    )
     missing = lsh.select("id_a", "id_b").join(
         ap.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
     )
@@ -3813,8 +3785,8 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # ONE corpus unigram LM feeds the lm, ppl and dsir arms (it used to
     # be re-built per consumer — 6 full explode+agg passes per collect)
-    lm_all = _tqp_share(tx.unigram_lm(docs))
-    lp = _tqp_share(tx.doc_logprob(docs, lm_all))
+    lm_all = tx.unigram_lm(docs)
+    lp = tx.doc_logprob(docs, lm_all)
     lm_rows = (
         lp.select(
             F.floor(F.col("mean_logp") * 10).cast("long").alias("b")
@@ -3849,7 +3821,7 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as the unigram lm arm.
     even = docs.filter(F.col("doc_id") % 2 == 0)
     lp2 = tx.doc_bigram_logprob(
-        docs, tx.bigram_lm(even), _tqp_share(tx.unigram_lm(even))
+        docs, tx.bigram_lm(even), tx.unigram_lm(even)
     )
     lm2_rows = (
         lp2.select(
@@ -3868,9 +3840,7 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # even-half training / whole-corpus scoring split so unseen-bigram
     # (λ·P_cont), unseen-context (P_cont) and unseen-word (floor)
     # paths all genuinely fire; same deci-bucket histogram contract.
-    kn_b, kn_c, kn_q = tx.kneser_ney_bigram_lm(
-        even, materialize_pairs=_tqp_share_on()
-    )
+    kn_b, kn_c, kn_q = tx.kneser_ney_bigram_lm(even)
     kn_rows = (
         tx.doc_kn_logprob(docs, kn_b, kn_c, kn_q)
         .select(F.floor(F.col("mean_logp") * 10).cast("long").alias("b"))
@@ -3959,9 +3929,7 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # smallest-label tie-break).
     nb_pred = tx.nb_classify(
         docs.filter(F.col("doc_id") % 2 == 1),
-        _tqp_share(
-            tx.nb_model(docs.filter(F.col("doc_id") % 2 == 0), label_col="lang")
-        ),
+        tx.nb_model(docs.filter(F.col("doc_id") % 2 == 0), label_col="lang"),
     )
     nbc_rows = (
         docs.filter(F.col("doc_id") % 2 == 1)
@@ -3982,12 +3950,8 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weight buckets (one mis-weighted doc shifts a bucket) plus the
     # exact top-10 most-target-like doc ids (rank over the rounded
     # weight, id tie-break — the deterministic resampling stand-in).
-    dw = _tqp_share(
-        tx.dsir_logweights(
-            docs,
-            _tqp_share(tx.unigram_lm(docs.filter(F.col("lang") == "en"))),
-            lm_all,
-        )
+    dw = tx.dsir_logweights(
+        docs, tx.unigram_lm(docs.filter(F.col("lang") == "en")), lm_all
     )
     dsir_buckets = (
         dw.select(F.floor("log_weight").cast("long").alias("b"))
@@ -4032,16 +3996,13 @@ def q_text_quality_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # less gate cost at sf1 (the corpus-wide pass belongs to the
     # operators' own scale rows, not this panel)
     eval_docs = docs.filter(F.col("doc_id") % 5 == 0)
-    # bpairs feeds four arms (bleu stats, rouge-1, rouge-2, chrf); the
-    # per-row punct-strip regex is worth exactly one execution
-    bpairs = _tqp_share(
-        eval_docs.select(
-            F.col("doc_id").alias("pair_id"),
-            F.lower(
-                F.regexp_replace(F.col("text"), r"[^A-Za-z0-9\s]", "")
-            ).alias("cand"),
-            F.col("text").alias("ref"),
-        )
+    # bpairs feeds four arms (bleu stats, rouge-1, rouge-2, chrf)
+    bpairs = eval_docs.select(
+        F.col("doc_id").alias("pair_id"),
+        F.lower(
+            F.regexp_replace(F.col("text"), r"[^A-Za-z0-9\s]", "")
+        ).alias("cand"),
+        F.col("text").alias("ref"),
     )
     bstats = slot_persist(tx.bleu_pair_stats(bpairs), "bleu_stats")
     bleu_buckets = (

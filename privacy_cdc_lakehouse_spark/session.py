@@ -2,10 +2,10 @@
 
 Replaces the reference's session-config block (Iceberg REST catalog + S3
 warehouse, ``/root/reference/jobs/ingest_orders_raw.py:6-19``) with a
-self-contained local-or-cluster builder. Delta Lake extensions are
-attached automatically when the jar is on the classpath (import-try —
-not available in the v1 image, where the lake layer falls back to the
-Parquet copy-on-write implementation in ``tables.py``).
+self-contained local-or-cluster builder. The lake layer is the Parquet
+copy-on-write table format in ``tables.py`` on the stock
+``spark_catalog``; no catalog or SQL extension is swapped in. This
+module imports nothing from the package, so any module may import it.
 
 Scale notes (100 TB / 1000 executors):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
@@ -24,14 +24,20 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _delta_available() -> bool:
-    """True when the delta-spark package (and its jar) is importable."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except Exception:
-        return False
+def _session_stopped(sess) -> bool:
+    """True only when the session is POSITIVELY known stopped. A
+    backend without the classic ``_sc._jsc`` internals (Spark Connect)
+    must answer "alive", not "stopped" — answering "stopped" there
+    made every memo lookup purge the whole memo, silently disabling
+    it."""
+    sc = getattr(sess, "_sc", None)
+    if sc is not None:
+        try:
+            return sc._jsc is None  # SparkContext.stop() nulls _jsc
+        except Exception:
+            return False
+    stopped = getattr(sess, "is_stopped", None)  # Connect exposes this
+    return bool(stopped) if isinstance(stopped, bool) else False
 
 
 def session_builder(
@@ -65,13 +71,6 @@ def session_builder(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if _delta_available():
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
     return builder
 
 

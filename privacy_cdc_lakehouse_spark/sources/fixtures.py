@@ -22,6 +22,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from privacy_cdc_lakehouse_spark.session import _session_stopped
+
 # (session id, absolute path, mtime_ns, size) -> DataFrame handle.
 # Round-15 measure: tpch_join_panel alone called load_table 86 times,
 # ~0.16 s each (footer/schema read + relation analysis) = 14 s of
@@ -32,21 +34,6 @@ from pyspark.sql import functions as F
 # stopped sessions are purged on every lookup.
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 _TABLE_MEMO_LOCK = threading.Lock()
-
-
-def _session_stopped(sess) -> bool:
-    """True only when POSITIVELY known stopped — a backend without the
-    classic ``_sc._jsc`` internals (Spark Connect) must read as alive,
-    or every lookup purges the memo and the cache never hits
-    (round-16 advisor item)."""
-    sc = getattr(sess, "_sc", None)
-    if sc is not None:
-        try:
-            return sc._jsc is None
-        except Exception:
-            return False
-    stopped = getattr(sess, "is_stopped", None)
-    return bool(stopped) if isinstance(stopped, bool) else False
 
 
 def _ns_timestamp_cols(path: str) -> list[str]:

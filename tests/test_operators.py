@@ -150,29 +150,44 @@ def test_connected_components_min_label(spark):
 
 
 def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
-    """The 100 TB fault-tolerance path: with checkpoint_dir set the
-    loop uses reliable checkpoint() snapshots (survives executor loss,
-    unlike the local default) — same labels, and the snapshots actually
-    land in the given directory."""
+    """The 100 TB fault-tolerance path: with
+    spark.graft.reliableIntermediates=true plus a checkpoint directory,
+    the CC loop (eager) and a graph loop (k-core peeling, lazy) use
+    reliable checkpoint() snapshots that survive executor loss — same
+    rows as the local default, and the snapshots land in the
+    directory."""
+    from privacy_cdc_lakehouse_spark.operators import graph as G
     from privacy_cdc_lakehouse_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
     )
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+
+    loops = {
+        "cc": lambda: connected_components(pairs),
+        "k_core": lambda: G.k_core(edges, 2, rounds=1),
     }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    local = {k: sorted(tuple(r) for r in f().collect()) for k, f in loops.items()}
+    assert dict(local["cc"]) == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
     import os
 
-    files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(ckpt)
-        for f in fs
-    ]
-    assert files, "reliable checkpoint dir is empty — checkpoint() not used"
+    spark.conf.set("spark.graft.reliableIntermediates", "true")
+    try:
+        for k, f in loops.items():
+            ckpt = str(tmp_path / f"{k}_ckpt")
+            spark.sparkContext.setCheckpointDir(ckpt)
+            assert sorted(tuple(r) for r in f().collect()) == local[k]
+            files = [
+                os.path.join(dp, name)
+                for dp, _, fs in os.walk(ckpt)
+                for name in fs
+            ]
+            assert files, f"{k}: checkpoint dir is empty — checkpoint() not used"
+    finally:
+        spark.conf.unset("spark.graft.reliableIntermediates")
 
 
 def test_near_dup_keepers_on_augmented_corpus(spark, sf_dir):

@@ -1,8 +1,7 @@
 """Round-16 optimization-behavior pins: checkpoint_df's durability
-gate, ensure_parallelism's structural exchange detection + stats bound,
-_candidate_hint's over-threshold lineage posture, identifier quoting,
-Kneser-Ney pair materialization parity, and the text_quality_panel
-sharing helpers."""
+gate and its fail-fast check, ensure_parallelism's structural exchange
+detection + stats bound, _candidate_hint's over-threshold lineage
+posture, identifier quoting, and the session-liveness probe."""
 
 from __future__ import annotations
 
@@ -44,6 +43,29 @@ def test_checkpoint_df_reliable_gate(spark, tmp_path):
         assert files, "reliable gate set but checkpoint dir is empty"
     finally:
         spark.conf.unset("spark.graft.reliableIntermediates")
+
+
+def test_checkpoint_df_reliable_without_dir_fails_fast(spark, monkeypatch):
+    """The reliable gate with no checkpoint directory raises a ValueError
+    naming both settings at the call, not a SparkException deep inside
+    the first query."""
+    import pytest
+
+    from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
+
+    # the session fixture is shared, so another test may already have
+    # set a directory; present the unset state to checkpoint_df
+    monkeypatch.setattr(spark._sc, "getCheckpointDir", lambda: None)
+    spark.conf.set("spark.graft.reliableIntermediates", "true")
+    try:
+        with pytest.raises(ValueError) as err:
+            checkpoint_df(spark.range(3), eager=False)
+        msg = str(err.value)
+        assert "spark.graft.reliableIntermediates" in msg
+        assert "setCheckpointDir" in msg
+    finally:
+        spark.conf.unset("spark.graft.reliableIntermediates")
+    assert checkpoint_df(spark.range(3)).count() == 3  # local default
 
 
 def test_plan_has_exchange_structural_not_substring(spark):
@@ -123,37 +145,12 @@ def test_qident_escapes_backticks(spark):
     assert len(out) == 4  # 2 rows x 2 tables, no parse error
 
 
-def test_kneser_ney_materialize_parity(spark):
-    """materialize_pairs=True shares one bigram aggregate across the
-    three artifacts; every value (and a downstream scoring pass) is
-    bit-identical to the lazy form."""
-    from privacy_cdc_lakehouse_spark.operators import text as tx
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "the dog sat on the log"),
-            (3, "a cat and a dog"),
-            (4, "single"),
-        ],
-        "doc_id long, text string",
-    )
-    lazy = tx.kneser_ney_bigram_lm(docs)
-    mat = tx.kneser_ney_bigram_lm(docs, materialize_pairs=True)
-    for a, b in zip(lazy, mat):
-        ra = sorted(tuple(r) for r in a.collect())
-        rb = sorted(tuple(r) for r in b.collect())
-        assert ra == rb
-    sa = sorted(tuple(r) for r in tx.doc_kn_logprob(docs, *lazy).collect())
-    sb = sorted(tuple(r) for r in tx.doc_kn_logprob(docs, *mat).collect())
-    assert sa == sb and len(sa) > 0
-
-
 def test_session_stopped_unknown_backend_reads_alive():
     """A session object without classic internals (Spark Connect) must
     read ALIVE — answering 'stopped' purged the whole load_table memo
     on every lookup, silently disabling it."""
-    from privacy_cdc_lakehouse_spark.operators.util import _session_stopped
+    from privacy_cdc_lakehouse_spark.operators import util
+    from privacy_cdc_lakehouse_spark.session import _session_stopped
     from privacy_cdc_lakehouse_spark.sources import fixtures as fx
 
     class ConnectLike:  # no _sc attribute at all
@@ -162,6 +159,8 @@ def test_session_stopped_unknown_backend_reads_alive():
     class ConnectLikeStopped:
         is_stopped = True
 
+    # one definition, shared by both memo owners
+    assert util._session_stopped is _session_stopped
+    assert fx._session_stopped is _session_stopped
     assert _session_stopped(ConnectLike()) is False
-    assert fx._session_stopped(ConnectLike()) is False
-    assert fx._session_stopped(ConnectLikeStopped()) is True
+    assert _session_stopped(ConnectLikeStopped()) is True
