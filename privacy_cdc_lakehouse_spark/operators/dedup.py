@@ -34,7 +34,7 @@ from privacy_cdc_lakehouse_spark.operators.text import (
     normalized_fingerprint,  # noqa: F401  (re-export + local use)
     words,
 )
-from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df
+from privacy_cdc_lakehouse_spark.operators.util import checkpoint_df, fixpoint
 
 # ----------------------------- exact -----------------------------------
 
@@ -1111,9 +1111,11 @@ def connected_components(
     must not cost a round per hop). Near-dup clusters are short
     chains, so a handful of rounds either way. Per round: one
     broadcast-or-shuffle join on the edge list + one groupBy(node)
-    min + one |V| label self-join — all keyed, never all-pairs. The
-    driver round-trips only a single converged? count per iteration
-    (the MLlib iterative-algorithm contract). Iterative fixpoints are
+    min + one |V| label self-join — all keyed, never all-pairs. Each
+    round is ONE job: its eager checkpoint also observes the total
+    label drop, and :func:`util.fixpoint` stops when that stops
+    growing (labels only decrease, so an unchanged total means no
+    label changed). Iterative fixpoints are
     not single-statement SQL, so this operator is pytest-verified
     rather than DuckDB-oracle-checked (same as streaming §2.9);
     compressed == uncompressed-fixpoint parity is pytest-pinned (the
@@ -1123,7 +1125,9 @@ def connected_components(
     The edge list and each round's labels are materialized with an
     eager ``checkpoint_df``: executor-local by default, a reliable
     snapshot that survives executor loss under
-    ``spark.graft.reliableIntermediates=true``.
+    ``spark.graft.reliableIntermediates=true``. Exhausting ``max_iters``
+    raises ``RuntimeError``: unconverged labels are wrong labels, and
+    keeper election on them would silently keep duplicates.
     """
     edges = (
         # both directions from ONE pass over pairs (a union of two
@@ -1156,7 +1160,8 @@ def connected_components(
         .distinct()
         .select("id", F.col("id").alias("component"))
     )
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame) -> DataFrame:
         # neighbor labels via one join, then min(own, neighbors)
         neighbor = (
             edges.join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -1176,38 +1181,23 @@ def connected_components(
         root_of = merged.select(
             F.col("id").alias("component"), F.col("component").alias("_root")
         )
-        compressed = merged.join(root_of, "component", "left").select(
+        return merged.join(root_of, "component", "left").select(
             "id",
             F.coalesce(
                 F.least("_root", "component"), F.col("component")
             ).alias("component"),
         )
-        # truncate lineage per round
-        new_labels = checkpoint_df(compressed, eager=True)
-        # convergence check against the MATERIALIZED result (no
-        # recompute of the round's join+agg)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") < F.col("o.component"))
-            .limit(1)
-        )
-        converged = changed.isEmpty()
-        labels = new_labels
-        if converged:
-            break
-    else:
-        # Exhausting the budget without a fixpoint means the labels are
-        # WRONG (a long chain's minimum hasn't reached every node) —
-        # keeper election on them would silently keep duplicates. Fail
-        # loudly; the caller raises max_iters (rounds needed = component
-        # diameter, so a legitimate >50-hop chain is itself a signal the
-        # candidate graph needs investigation).
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            f"iterations — component diameter exceeds the budget; raise "
-            f"max_iters or inspect the pair graph for chain-shaped noise"
-        )
+
+    # Labels only ever decrease, so the total drop sum(id - component)
+    # only grows, and repeats exactly when no label changed. A first
+    # round that changes nothing reads 0, which ends the loop with no
+    # seed to compute; an empty input reads NULL, which equals the
+    # unset previous value and ends it too.
+    dec = "decimal(38,0)"  # keeps the sum exact
+    drop = F.sum(F.col("id").cast(dec) - F.col("component").cast(dec))
+    labels, _ = fixpoint(
+        labels, step, "connected_components", max_rounds=max_iters, measure=drop
+    )
     return labels
 
 

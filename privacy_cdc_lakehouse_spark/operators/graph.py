@@ -14,8 +14,11 @@ contributions by ``dst``. Nothing is ever collected to the driver;
 the teleport constant and the dangling-mass redistribution ride
 broadcast 1-row scalar frames (the repo's sanctioned scalar idiom).
 Lineage grows one join+agg per iteration, so ``checkpoint_every``
-truncates it with ``checkpoint_df`` exactly as ``bpe_train`` and
-``mmr_rerank`` do for their driver-round loops.
+truncates it with ``checkpoint_df``. The other iterative operators
+(hits, label_propagation, k_core, core_number, k_truss) run their
+rounds through ``util.fixpoint``: a lazy checkpoint per pinned round,
+or an eager one per fixpoint round with the convergence count observed
+by that same job.
 
 Determinism/replayability contract: every iteration's rank is rounded
 to ``round_dp`` decimals. Per-node contribution sums are
@@ -34,8 +37,10 @@ from pyspark.sql.window import Window
 
 from privacy_cdc_lakehouse_spark.operators.util import (
     checkpoint_df,
+    checkpoint_measured,
     checkpoint_parallel,
     ensure_parallelism,
+    fixpoint,
 )
 
 
@@ -433,10 +438,13 @@ def hits(
                 round_dp,
             ).alias(out),
         )
-    for _ in range(iterations):
-        auth = _propagate(state, "hub", "src", "dst", "authority")
+
+    def step(state_df: DataFrame) -> DataFrame:
+        auth = _propagate(state_df, "hub", "src", "dst", "authority")
         hub = _propagate(auth, "authority", "dst", "src", "hub")
-        state = checkpoint_df(auth.join(hub, "node"), eager=False)
+        return auth.join(hub, "node")
+
+    state, _ = fixpoint(state, step, "hits", rounds=iterations)
     return state.select("node", "authority", "hub")
 
 
@@ -553,7 +561,8 @@ def label_propagation(
     )
     base = checkpoint_parallel(nodes.join(sd, "node", "left"))
     lab = base.select("node", F.col("_seed").alias("label"))
-    for _ in range(iterations):
+
+    def step(lab: DataFrame) -> DataFrame:
         msgs = (
             e.join(
                 lab.filter(F.col("label").isNotNull()).select(
@@ -572,16 +581,17 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select("node", F.col("label").alias("_new"))
         )
-        lab = checkpoint_df(
+        return (
             base.join(lab.select("node", "label"), "node")
             .join(adopted, "node", "left")
             # seeds are immutable; non-seeds adopt the majority or keep
             .select(
                 "node",
                 F.coalesce("_seed", "_new", "label").alias("label"),
-            ),
-            eager=False,
+            )
         )
+
+    lab, _ = fixpoint(lab, step, "label_propagation", rounds=iterations)
     return lab.select("node", "label")
 
 
@@ -624,6 +634,36 @@ def label_propagation_oracle_ctes(
 )"""
         )
     return ",\n".join(ctes)
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph of an edge list: distinct (a, b)
+    with a < b, self-loops dropped."""
+    a, b = F.col(src).cast("long"), F.col(dst).cast("long")
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(ed: DataFrame) -> DataFrame:
+    """(node, core_deg): each node's degree in the edge list (a, b)."""
+    return (
+        ed.select(F.col("a").alias("node"))
+        .unionByName(ed.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("core_deg"))
+    )
+
+
+def _peel(ed: DataFrame, k: int) -> DataFrame:
+    """One synchronous k-core peel: the edges whose endpoints both have
+    degree >= k (a degree aggregate and two semi-joins)."""
+    keep = _degrees(ed).filter(F.col("core_deg") >= k).select("node")
+    return ed.join(
+        keep.select(F.col("node").alias("a")), "a", "left_semi"
+    ).join(keep.select(F.col("node").alias("b")), "b", "left_semi")
 
 
 def _triangle_list(und: DataFrame, orient: str) -> DataFrame:
@@ -726,14 +766,7 @@ def triangles(
     triangle-free nodes)."""
     if orient not in ("degree", "canonical"):
         raise ValueError(f"orient must be 'degree' or 'canonical', got {orient!r}")
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     tri = _triangle_list(und, orient)
     corners = (
         tri.select(F.col("a").alias("node"))
@@ -774,14 +807,7 @@ def clustering_coefficient(
     cross-engine parity is exact with no rounding-boundary residual.
 
     Returns (node, deg, n_triangles, lcc6) for every node."""
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     # canonicalize ONCE: both the triangle count and the degree
     # aggregate consume the undirected edge list, and the upstream
     # edge pipeline (often an expensive fact-fact distinct) must not
@@ -857,14 +883,7 @@ def adamic_adar(
     rounding-boundary residual posture.
 
     Returns (x, y, common_neighbors, aa6, ra6) with x < y."""
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     nbrs = und.select(F.col("a").alias("z"), F.col("b").alias("n")).unionByName(
         und.select(F.col("b").alias("z"), F.col("a").alias("n"))
     )
@@ -909,10 +928,11 @@ def k_core(
 
     ``rounds=None`` (default) peels to the FIXPOINT: each round is
     one |E|-shuffle (degree aggregate over surviving edges + a
-    broadcast semi-join shrink), and the driver reads ONE 1-row
-    convergence scalar per round (the kmeans_fit / bpe_train
-    sanctioned bounded-collect loop; peel count ≤ graph degeneracy
-    depth, typically tens even on web graphs). A PINNED ``rounds=R``
+    broadcast semi-join shrink) materialized by one eager checkpoint
+    whose job also observes the surviving edge count — the
+    convergence measure of :func:`util.fixpoint`, so a round is one
+    job and no separate count (peel count ≤ graph degeneracy depth,
+    typically tens even on web graphs). A PINNED ``rounds=R``
     runs R synchronous peels with NO driver reads and NO convergence
     check — the oracle-replayable form (:func:`k_core_oracle_ctes`
     unrolls the same R rounds as chained CTEs); all-integer, so
@@ -923,11 +943,10 @@ def k_core(
     (the degree union twice, the keep set twice, the join probe), so
     an un-truncated R-round chain grows the Catalyst tree as 5^R and
     ANALYSIS — not execution — becomes the bottleneck by R≈6. Every
-    round therefore ends in a LAZY ``checkpoint_df`` (plan truncates
-    to an RDD scan node immediately; materialization rides the next
-    action — the convergence count in the fixpoint path, the caller's
-    single action in the pinned path), keeping analysis O(1) per
-    round in BOTH paths.
+    round therefore ends in a ``checkpoint_df`` (eager in the fixpoint
+    path; LAZY in the pinned path, where materialization rides the
+    caller's single action), keeping analysis O(1) per round in BOTH
+    paths.
 
     Returns (node, core_deg): survivors after peeling, with their
     degree within the surviving subgraph (≥ k at the fixpoint; a
@@ -937,48 +956,12 @@ def k_core(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds is not None and rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = checkpoint_parallel(und)
+    und = checkpoint_parallel(_undirected(edges, src, dst))
 
-    def degrees(ed: DataFrame) -> DataFrame:
-        return (
-            ed.select(F.col("a").alias("node"))
-            .unionByName(ed.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("core_deg"))
-        )
-
-    def peel(ed: DataFrame) -> DataFrame:
-        keep = degrees(ed).filter(F.col("core_deg") >= k).select("node")
-        return ed.join(
-            keep.select(F.col("node").alias("a")), "a", "left_semi"
-        ).join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-
-    cur = und
-    if rounds is not None:
-        for _ in range(rounds):
-            cur = checkpoint_df(peel(cur), eager=False)
-        return degrees(cur)
-    # ONE 1-row edge-count scalar per round (the sanctioned
-    # driver-loop read): a peel that drops no node leaves the edge
-    # count unchanged, so last round's count doubles as this round's
-    # "before" — no second action. The count also materializes the
-    # round's lazy checkpoint, so each round executes exactly one
-    # peel, never the chain.
-    prev_n = None
-    while True:
-        cur = checkpoint_df(peel(cur), eager=False)
-        n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
-        if n == prev_n or n == 0:
-            return degrees(cur)
-        prev_n = n
+    # a peel that drops no node leaves the edge count unchanged, so
+    # the surviving-edge count is the convergence measure
+    cur, _ = fixpoint(und, lambda ed: _peel(ed, k), "k_core", rounds=rounds)
+    return _degrees(cur)
 
 
 def k_core_oracle_ctes(
@@ -1036,15 +1019,15 @@ def core_number(
     node on an edge has core ≥ 1 — isolated nodes never appear in an
     edge list). Default (``k_max=None, rounds_per_k=None``) peels each
     level to its FIXPOINT and stops when the graph empties — the exact
-    decomposition; reuses :func:`k_core`'s bounded driver loop (ONE
-    1-row convergence scalar per peel, lazy ``checkpoint_df`` per
-    round so the Catalyst tree stays O(1) — the 5^R analysis-blowup
-    lesson documented there). Total peels across all levels ≤
-    degeneracy + #levels — the same O(tens) bound as one fixpoint
-    k_core on real graphs; the bound holds because each level's
-    converged edge count seeds the next level's convergence test (one
-    cheap count seeds level 2), so an already-converged level costs
-    one peel, not two.
+    decomposition; reuses :func:`k_core`'s :func:`util.fixpoint` loop
+    (one eager ``checkpoint_df`` per peel observing the surviving edge
+    count in the same job, so the Catalyst tree stays O(1) — the 5^R
+    analysis-blowup lesson documented there). Total peels across all
+    levels ≤ degeneracy + #levels — the same O(tens) bound as one
+    fixpoint k_core on real graphs; the bound holds because each
+    level's converged edge count seeds the next level's convergence
+    test (the edge list's own checkpoint observes the level-2 seed),
+    so an already-converged level costs one peel, not two.
 
     PINNED form (``k_max=K, rounds_per_k=R``): exactly R synchronous
     peels per level for levels 2..K, survivors after level K reported
@@ -1068,60 +1051,25 @@ def core_number(
             raise ValueError(f"rounds_per_k must be >= 1, got {rounds_per_k}")
         if k_max is None:
             raise ValueError("rounds_per_k (pinned mode) requires k_max")
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    # the level-2 seed count rides the spine's own checkpoint job
+    cur, carry_n = checkpoint_measured(
+        ensure_parallelism(_undirected(edges, src, dst))
     )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = checkpoint_parallel(und)
-
-    def degrees(ed: DataFrame) -> DataFrame:
-        return (
-            ed.select(F.col("a").alias("node"))
-            .unionByName(ed.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("core_deg"))
-        )
-
-    def peel(ed: DataFrame, k: int) -> DataFrame:
-        keep = degrees(ed).filter(F.col("core_deg") >= k).select("node")
-        return ed.join(
-            keep.select(F.col("node").alias("a")), "a", "left_semi"
-        ).join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-
-    cur = und
-    prev_nodes = checkpoint_df(degrees(cur).select("node"), eager=False)
+    prev_nodes = checkpoint_df(_degrees(cur).select("node"), eager=False)
     assigned: list[DataFrame] = []
     k = 2
-    empty = False
-    # Round-14 advice: a level's fixpoint edge count IS the next
-    # level's starting count, so carrying it across levels lets an
-    # already-converged level break after ONE peel instead of two —
-    # saving one |E|-shuffle per level and making the docstring's
-    # "total peels <= degeneracy + #levels" bound actually hold. Only
-    # the first level pays a seed count (one cheap 1-row scalar vs a
-    # full extra peel).
-    carry_n: int | None = None
-    if rounds_per_k is None:
-        carry_n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
     while True:
-        if rounds_per_k is not None:
-            for _ in range(rounds_per_k):
-                cur = checkpoint_df(peel(cur, k), eager=False)
-        else:
-            prev_n = carry_n
-            while True:
-                cur = checkpoint_df(peel(cur, k), eager=False)
-                n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
-                if n == prev_n or n == 0:
-                    empty = n == 0
-                    break
-                prev_n = n
-            carry_n = n
-        surv = checkpoint_df(degrees(cur).select("node"), eager=False)
+        # Round-14 advice: a level's fixpoint edge count IS the next
+        # level's starting count, so carrying it across levels lets an
+        # already-converged level stop after ONE peel instead of two —
+        # saving one |E|-shuffle per level and making the docstring's
+        # "total peels <= degeneracy + #levels" bound actually hold.
+        cur, carry_n = fixpoint(
+            cur, lambda ed, k=k: _peel(ed, k), "core_number",
+            rounds=rounds_per_k, seed=carry_n,
+        )
+        empty = carry_n == 0
+        surv = checkpoint_df(_degrees(cur).select("node"), eager=False)
         assigned.append(
             prev_nodes.join(surv, "node", "left_anti").select(
                 "node", F.lit(k - 1).cast("long").alias("core")
@@ -1249,10 +1197,12 @@ def k_truss(
     :func:`k_truss_oracle_ctes` unrolls the identical schedule, all
     integers, exact cross-engine parity). Dropping an edge can
     destroy triangles that supported OTHER edges, so peeling cascades
-    exactly like k-core — and reuses its driver-loop discipline: ONE
-    1-row edge-count scalar per round (the carried-count convergence
-    seed from the round-14 advice — an already-converged graph costs
-    one support pass, not two), lazy ``checkpoint_df`` per round.
+    exactly like k-core — and reuses its :func:`util.fixpoint` loop:
+    one eager ``checkpoint_df`` per round observing the surviving edge
+    count in the same job, seeded by the count the edge list's own
+    checkpoint observes (the round-14 advice — an already-converged
+    graph costs one support pass, not two); pinned rounds are lazy
+    checkpoints that read nothing back.
 
     Returns the truss edges (a, b, support) with support computed on
     the FINAL subgraph (at fixpoint every support >= k-2 — the
@@ -1267,39 +1217,19 @@ def k_truss(
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     if orient not in ("degree", "canonical"):
         raise ValueError(f"orient must be 'degree' or 'canonical', got {orient!r}")
-    from privacy_cdc_lakehouse_spark.operators.util import ensure_parallelism
+    # the first round's "before" count rides the spine's checkpoint job
+    cur, n0 = checkpoint_measured(
+        ensure_parallelism(_undirected(edges, src, dst))
+    )
 
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    cur = checkpoint_parallel(und)
-    need = k - 2
-    if rounds is not None:
-        for _ in range(rounds):
-            cur = checkpoint_df(
-                _edge_support(cur, orient)
-                .filter(F.col("support") >= need)
-                .select("a", "b"),
-                eager=False,
-            )
-    else:
-        prev_n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
-        while True:
-            cur = checkpoint_df(
-                _edge_support(cur, orient)
-                .filter(F.col("support") >= need)
-                .select("a", "b"),
-                eager=False,
-            )
-            n = cur.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
-            if n == prev_n or n == 0:
-                break
-            prev_n = n
+    def peel(ed: DataFrame) -> DataFrame:
+        return (
+            _edge_support(ed, orient)
+            .filter(F.col("support") >= k - 2)
+            .select("a", "b")
+        )
+
+    cur, _ = fixpoint(cur, peel, "k_truss", rounds=rounds, seed=n0)
     return _edge_support(cur, orient)
 
 

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import itertools
 import threading
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from privacy_cdc_lakehouse_spark.session import _session_stopped
 
@@ -94,45 +97,64 @@ def checkpoint_df(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def checkpoint_parallel(df: DataFrame) -> DataFrame:
-    """Eager :func:`checkpoint_df` + guaranteed ``defaultParallelism``
-    partitions — the loop-spine materialization for iterative
-    operators.
+    """Eager :func:`checkpoint_df` of the :func:`ensure_parallelism`
+    spread — the spine materialization for iterative operators: one
+    execution, and the under-split decision is read off the plan
+    before it, so nothing runs twice and no dead first copy is left
+    behind."""
+    return checkpoint_df(ensure_parallelism(df), eager=True)
 
-    Replaces the ``ensure_parallelism(df).localCheckpoint(eager=False)``
-    pair (round-15 finding): the old partition probe EXECUTED the
-    frame's AQE stages once just to count partitions, discarded the
-    result, and the lazy checkpoint then re-executed the same lineage
-    at first action — two executions of every loop spine, the second
-    hidden at plan-build time (tpch_join_panel paid ~17 s of build
-    running its graph edge joins it would run again at collect).
-    Eager checkpoint is the single materialization the loop needs
-    anyway; the materialized RDD's partition count is then free, and
-    the under-split case repartitions CHECKPOINTED blocks (small by
-    construction when that branch fires — big data always arrives
-    pre-split) and re-checkpoints so every round reads the spread
-    copy without replaying the shuffle."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    ck = checkpoint_df(df, eager=True)
-    try:
-        n = (
-            ck._jdf.queryExecution().executedPlan().execute().getNumPartitions()
-        )
-    except Exception:  # non-classic backends
-        n = ck.rdd.getNumPartitions()
-    if n < target:
-        spread = checkpoint_df(ck.repartition(target), eager=True)
-        # The spread copy is materialized; the first checkpoint's
-        # blocks are now dead weight — release them instead of pinning
-        # until driver GC (round-16 advisor item). Block loss after
-        # this point is no worse than before: a localCheckpoint is
-        # already lineage-free, so only `spread`'s own blocks matter.
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass  # non-classic backends / plan shape without .rdd()
-        return spread
-    return ck
+
+def checkpoint_measured(
+    df: DataFrame, measure: Column | None = None
+) -> tuple[DataFrame, Any]:
+    """Eager :func:`checkpoint_df` with ``measure`` (an aggregate
+    Column, default ``count(*)``) observed by the same job: returns the
+    materialized frame and the measure's value. The checkpoint must be
+    eager: a lazy one runs no materializing job at this call, so
+    nothing would fill the Observation with this frame's value."""
+    obs = Observation()
+    if measure is None:
+        measure = F.count(F.lit(1))
+    out = checkpoint_df(df.observe(obs, measure.alias("m")), eager=True)
+    return out, obs.get["m"]
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    op: str,
+    rounds: int | None = None,
+    max_rounds: int | None = None,
+    measure: Column | None = None,
+    seed: Any = None,
+) -> tuple[DataFrame, Any]:
+    """The one round loop for iterative DataFrame operators: applies
+    ``step`` round after round, each round materialized through
+    :func:`checkpoint_df` so the plan stays one round deep.
+
+    - Pinned (``rounds=R``): R LAZY checkpoints, nothing read back;
+      the caller's action materializes them. Returns ``(state, None)``.
+    - Fixpoint: each round is an eager checkpoint whose job observes
+      ``measure`` (default ``count(*)``), a value that must repeat only
+      when the step changed nothing. Stops when it equals the previous
+      round's (``seed`` before round 1) or is 0; returns ``(state,
+      measure)``. Past ``max_rounds`` (None: unbounded) it raises
+      ``RuntimeError`` naming ``op``: unconverged state is wrong."""
+    if rounds is not None:
+        for _ in range(rounds):
+            state = checkpoint_df(step(state), eager=False)
+        return state, None
+    prev = seed
+    for _ in itertools.count() if max_rounds is None else range(max_rounds):
+        state, m = checkpoint_measured(step(state), measure)
+        if m == prev or m == 0:
+            return state, m
+        prev = m
+    raise RuntimeError(
+        f"{op} did not converge within {max_rounds} rounds; raise its "
+        f"round budget or inspect the input for chain-shaped structure"
+    )
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -160,10 +182,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
       downstream per-row work be under-split" is exactly "is the data
       small"; join-stats over-estimates err toward skipping the
       repartition, which is the safe direction at scale (never add a
-      shuffle to big data for parallelism it already has)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+      shuffle to big data for parallelism it already has).
+
+    Where the JVM plan cannot be read (Spark Connect) the frame comes
+    back untouched: probing ``df.rdd`` there would run stages at build
+    time, and Connect has no ``rdd``."""
     try:
+        target = df.sparkSession.sparkContext.defaultParallelism
         qe = df._jdf.queryExecution()
         plan = qe.sparkPlan()
         if not _plan_has_exchange(plan):
@@ -182,16 +207,14 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         # py4j may hand sizeInBytes back as a Python int (java
         # BigInteger auto-conversion) or as a JavaObject depending on
         # version — the old `.toString()`-only form raised on int and
-        # silently fell into the except-path `df.rdd` probe, which
-        # EXECUTES AQE stages at build time (round-16 finding).
+        # silently skipped the spread through the except path.
         raw = qe.optimizedPlan().stats().sizeInBytes()
         size = raw if isinstance(raw, int) else int(raw.toString())
         if size < target * _advisory_partition_bytes(df.sparkSession):
             return df.repartition(target)
         return df
-    except Exception:  # non-classic backends: fall back to the RDD path
-        n = df.rdd.getNumPartitions()
-        return df.repartition(target) if n < target else df
+    except Exception:  # non-classic backends
+        return df
 
 
 def _plan_has_exchange(plan) -> bool:

@@ -2405,7 +2405,7 @@ def q_cc_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges consumed twice (the CC loop seeds from them AND the
     # fixpoint-violation join re-reads them) — materialize once
     pairs = checkpoint_df(chain.unionByName(head), eager=False)
-    comp = checkpoint_df(dd.connected_components(pairs), eager=False)
+    comp = dd.connected_components(pairs)  # returned materialized
     viol = (
         pairs.join(
             comp.select(

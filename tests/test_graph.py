@@ -607,6 +607,33 @@ def test_k_core_pinned_rounds_and_cascade(spark):
         G.k_core(_edges_df(spark, edges), k=0)
 
 
+def test_k_core_pinned_rounds_materialize_nothing_at_build_time(spark):
+    """Pinned rounds are lazy checkpoints that read nothing back: building
+    k_core with 4 rounds runs as many checkpoint-materializing jobs as
+    building it with 1 round — the edge list's one eager checkpoint —
+    so no round is materialized or counted before the caller's action.
+    (Each lazy checkpoint still lets AQE run its round's query stages
+    when the checkpoint is built; those jobs are not counted here.)"""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    edges = _edges_df(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)])
+
+    def build_jobs(rounds):
+        group = f"k_core_build_rounds_{rounds}"
+        sc.setJobGroup(group, "")
+        try:
+            G.k_core(edges, 2, rounds=rounds)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        names = [
+            store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)
+        ]
+        return sum("checkpoint" in n.lower() for n in names)
+
+    assert build_jobs(1) == build_jobs(4) == 1
+
+
 def _py_core_number(edges):
     """Pure-Python Batagelj-Zaveršnik: peel at increasing k; a node
     dropped while peeling at threshold k has core number k-1. Dropping

@@ -152,10 +152,11 @@ def test_connected_components_min_label(spark):
 def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
     """The 100 TB fault-tolerance path: with
     spark.graft.reliableIntermediates=true plus a checkpoint directory,
-    the CC loop (eager) and a graph loop (k-core peeling, lazy) use
-    reliable checkpoint() snapshots that survive executor loss — same
-    rows as the local default, and the snapshots land in the
-    directory."""
+    the CC loop, pinned k-core peeling (lazy) and fixpoint k-core and
+    k-truss peeling (eager, convergence observed by the checkpoint
+    job) use reliable checkpoint() snapshots that survive executor
+    loss — same rows as the local default, and the snapshots land in
+    the directory."""
     from privacy_cdc_lakehouse_spark.operators import graph as G
     from privacy_cdc_lakehouse_spark.operators.dedup import connected_components
 
@@ -169,6 +170,8 @@ def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
     loops = {
         "cc": lambda: connected_components(pairs),
         "k_core": lambda: G.k_core(edges, 2, rounds=1),
+        "k_core_fixpoint": lambda: G.k_core(edges, 2),
+        "k_truss_fixpoint": lambda: G.k_truss(edges, 3),
     }
     local = {k: sorted(tuple(r) for r in f().collect()) for k, f in loops.items()}
     assert dict(local["cc"]) == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
@@ -466,14 +469,22 @@ def test_connected_components_raises_when_unconverged(spark):
     election."""
     import pytest
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(chain, max_iters=2)
-    # with budget it converges to one component
-    out = dd.connected_components(chain, max_iters=20)
-    assert set(r["component"] for r in out.collect()) == {0}
+    def chain(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "id_a long, id_b long"
+        )
+
+    # round budgets pinned at their measured minimum: compression halves
+    # label paths, and the round that changes nothing ends the loop
+    for n, enough in ((10, 4), (30, 5)):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dd.connected_components(chain(n), max_iters=enough - 1)
+        out = dd.connected_components(chain(n), max_iters=enough)
+        assert set(r["component"] for r in out.collect()) == {0}
+    # no label can change: the first round already is the fixpoint
+    selfs = spark.createDataFrame([(5, 5), (7, 7)], "id_a long, id_b long")
+    out = dd.connected_components(selfs, max_iters=1)
+    assert sorted(tuple(r) for r in out.collect()) == [(5, 5), (7, 7)]
 
 
 def test_connected_components_union_find_parity(spark):

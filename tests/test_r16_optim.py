@@ -105,6 +105,20 @@ def test_ensure_parallelism_stats_branch_respects_advisory_bound(spark):
     assert out2.rdd.getNumPartitions() >= target
 
 
+def test_ensure_parallelism_unreadable_plan_returns_frame_untouched():
+    """Without a readable JVM plan (Spark Connect has no ``_jdf``) the
+    frame comes back as is, with no ``df.rdd`` probe: that would run
+    stages at build time, and Connect has no ``rdd``."""
+    from privacy_cdc_lakehouse_spark.operators.util import ensure_parallelism
+
+    class NoPlanFrame:
+        def __getattr__(self, name):  # _jdf, rdd, sparkSession, ...
+            raise AttributeError(f"stand-in frame has no {name}")
+
+    frame = NoPlanFrame()
+    assert ensure_parallelism(frame) is frame
+
+
 def test_candidate_hint_over_threshold_returns_lineage_frame(
     spark, monkeypatch
 ):
