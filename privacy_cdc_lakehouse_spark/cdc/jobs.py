@@ -9,8 +9,9 @@ One function per reference job:
 - ``rebuild_silver``     ≙ ``/root/reference/jobs/build_orders_silver.py``
   (full scan → parse → latest-state → atomic replace).
 - ``merge_silver``       ≙ ``/root/reference/jobs/merge_orders_silver.py``
-  (checkpoint read → incremental offset filter → parse → dedup →
-  3-clause MERGE → checkpoint advance).
+  (checkpoint read → stats-pruned read of the bronze dirs above the
+  watermark → parse → dedup → 3-clause MERGE → checkpoint advance as a
+  checked rewrite of the one-row-per-pipeline table).
 - ``build_privacy``      ≙ ``/root/reference/jobs/build_privacy_table.py``
   (scan silver → pseudonymize → atomic replace).
 
@@ -146,15 +147,17 @@ def ingest_bronze_idempotent(lake: Lakehouse, records: DataFrame) -> int | None:
         ).collect()[0]
         if bounds["lo"] is None:
             return None
-        if int(bounds["lo"]) <= hi:
-            seen = lake.bronze.read(
-                where=[("offset", ">=", int(bounds["lo"])), ("offset", "<=", hi)]
-            ).select("offset")
-            records = records.join(seen, "offset", "left_anti")
-    fresh = records
-    if fresh.isEmpty():
+        if int(bounds["lo"]) > hi:
+            # Fast path: a non-NULL min proves the batch non-empty and
+            # nothing filters it, so no isEmpty() job is needed.
+            return ingest_bronze(lake, records)
+        seen = lake.bronze.read(
+            where=[("offset", ">=", int(bounds["lo"])), ("offset", "<=", hi)]
+        ).select("offset")
+        records = records.join(seen, "offset", "left_anti")
+    if records.isEmpty():
         return None
-    return ingest_bronze(lake, fresh)
+    return ingest_bronze(lake, records)
 
 
 def rebuild_silver(lake: Lakehouse) -> int:
@@ -253,10 +256,15 @@ def forget_user(
             v_priv = lake.privacy.delete_where(
                 F.col("user_key") == F.lit(key)
             )
-    audit = spark.createDataFrame(
-        [(PIPELINE, int(user_id), n_silver, f"forget_user:{mode}")],
-        "pipeline string, subject_id long, rows_erased long, action string",
-    ).withColumn("at", F.current_timestamp())
+    # Built on the JVM (not createDataFrame): one literal row needs no
+    # Python worker.
+    audit = spark.range(1).select(
+        F.lit(PIPELINE).alias("pipeline"),
+        F.lit(int(user_id)).cast("long").alias("subject_id"),
+        F.lit(int(n_silver)).cast("long").alias("rows_erased"),
+        F.lit(f"forget_user:{mode}").alias("action"),
+        F.current_timestamp().alias("at"),
+    )
     LakeTable(spark, f"{lake.root}/monitoring/privacy_audit").append(audit)
     return {
         "rows_erased": n_silver,
@@ -306,7 +314,10 @@ def merge_silver(
     downstream consumer tails silver without re-reading snapshots.
     """
     lo = _last_offset(lake)
-    fresh = lake.bronze.read().filter(F.col("offset") > F.lit(lo))
+    # where= prunes every bronze dir whose footer max offset is at or
+    # below the watermark before any listing or scan; the residual
+    # filter keeps the rows exactly read().filter(offset > lo).
+    fresh = lake.bronze.read(where=[("offset", ">", lo)])
     if fresh.isEmpty():
         return None
 
@@ -409,13 +420,26 @@ def compute_dq_metrics(lake: Lakehouse) -> int:
 
 
 def _advance_checkpoint(lake: Lakehouse, offset: int) -> None:
-    """Scalar MERGE parity (``merge_orders_silver.py:156-165``)."""
-    row = lake.spark.createDataFrame(
-        [(PIPELINE, int(offset))], "pipeline string, last_offset long"
-    ).withColumn("updated_at", F.current_timestamp())
-    if not lake.checkpoints.exists():
-        lake.checkpoints.overwrite(row)
-    else:
-        # One literal row from createDataFrame — Catalyst estimates the
-        # unknown-size sentinel for it, so vouch for the broadcast.
-        lake.checkpoints.merge(row, keys=["pipeline"], broadcast_hint=True)
+    """Scalar MERGE parity (``merge_orders_silver.py:156-165``): the same
+    rows, column order and ``merge`` history op as a MERGE on
+    ``pipeline``. The table holds one row per pipeline, so the MERGE is
+    a checked rewrite: drop this pipeline's row (``eqNullSafe``, like
+    MERGE's ``<=>`` keys, keeps a NULL-pipeline row), add the new one,
+    and commit through ``_overwrite_checked``, which raises
+    ``ConcurrentWriteError`` if another commit landed after ``base``.
+    The row is built on the JVM: a ``createDataFrame`` row is a Python
+    RDD, and every job reading it would start Python workers."""
+    row = lake.spark.range(1).select(
+        F.lit(PIPELINE).alias("pipeline"),
+        F.lit(int(offset)).cast("long").alias("last_offset"),
+        F.current_timestamp().alias("updated_at"),
+    )
+    table = lake.checkpoints
+    base = table.current_version()
+    if base is None:
+        table.overwrite(row)
+        return
+    kept = table.read(version=base).filter(
+        ~F.col("pipeline").eqNullSafe(F.lit(PIPELINE))
+    )
+    table._overwrite_checked(kept.unionByName(row), base, "merge")

@@ -90,6 +90,57 @@ def test_incremental_merge_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert merge_silver(inc) is None
 
 
+def test_advance_checkpoint_checked_rewrite(spark, tmp_path, monkeypatch):
+    import datetime
+
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from privacy_cdc_lakehouse_spark.cdc import jobs
+    from privacy_cdc_lakehouse_spark.tables import ConcurrentWriteError, LakeTable
+
+    lake = Lakehouse(spark, str(tmp_path / "cp"))
+    ts = datetime.datetime(2024, 1, 1)
+    seed = [("orders", 5, ts), ("other", 7, ts), (None, 9, ts)]
+    lake.checkpoints.overwrite(
+        spark.createDataFrame(
+            seed, "pipeline string, last_offset long, updated_at timestamp"
+        )
+    )
+
+    def no_python_rows(*a, **k):
+        raise AssertionError("checkpoint row built through a Python RDD")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", no_python_rows)
+        jobs._advance_checkpoint(lake, 42)
+
+    rows = lake.checkpoints.read().collect()
+    assert len(rows) == 3
+    assert rows[0].__fields__ == ["pipeline", "last_offset", "updated_at"]
+    by_pipeline = {r["pipeline"]: r for r in rows}
+    assert by_pipeline["orders"]["last_offset"] == 42
+    assert by_pipeline["orders"]["updated_at"] != ts
+    assert {tuple(r) for r in rows if r["pipeline"] != "orders"} == set(seed[1:])
+    assert lake.checkpoints.history()[0]["op"] == "merge"
+
+    # Another writer's advance lands after this one read its base
+    # snapshot: the loser raises instead of overwriting the winner.
+    checked = LakeTable._overwrite_checked
+    raced = []
+
+    def race_then_commit(self, *a, **k):
+        if not raced:
+            raced.append(True)
+            jobs._advance_checkpoint(lake, 99)
+        return checked(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "_overwrite_checked", race_then_commit)
+    with pytest.raises(ConcurrentWriteError):
+        jobs._advance_checkpoint(lake, 43)
+    assert jobs._last_offset(lake) == 99
+
+
 def test_privacy_projection(spark, sf_dir, tmp_path):
     lake = Lakehouse(spark, str(tmp_path / "priv"))
     ingest_bronze(lake, cdc_events(spark, sf_dir))

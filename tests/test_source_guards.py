@@ -1,10 +1,13 @@
-"""Spark-free source guards: read the package sources and pin two
+"""Spark-free source guards: read the package sources and pin three
 design rules that a runtime test cannot see until it is too late.
 
 - ``operators/util.checkpoint_df`` is the one place that decides how an
   intermediate is materialized, so ``spark.graft.reliableIntermediates``
   covers every materialization. A direct ``.localCheckpoint(`` elsewhere
   would silently bypass the reliable mode.
+- ``cdc/jobs.py`` runs once per micro-batch and builds its literal rows
+  on the JVM: a ``createDataFrame`` row is a Python RDD, so every job
+  reading it starts Python workers, on every batch.
 - Environment variables are read only for deployment settings and test
   hooks named in ``ENV_ALLOWLIST``; every other behaviour is a Spark conf
   or a function argument, so there are no hidden process-wide knobs."""
@@ -62,6 +65,18 @@ def test_materialization_only_through_checkpoint_df():
         if tok in line
     ]
     assert not offenders, f"materialize via checkpoint_df: {offenders}"
+
+
+def test_no_create_dataframe_in_cdc_jobs():
+    src = dict(_sources())[os.path.join("cdc", "jobs.py")]
+    offenders = [
+        n for n, line in enumerate(src.splitlines(), 1) if "createDataFrame(" in line
+    ]
+    assert not offenders, (
+        f"cdc/jobs.py lines {offenders}: createDataFrame builds a Python RDD "
+        f"that starts Python workers on every batch; build literal rows with "
+        f"spark.range(1).select(F.lit(...), ...)"
+    )
 
 
 def test_env_reads_only_from_allowlist():
