@@ -69,7 +69,7 @@ def snapshot_sql(table: LakeTable, version: int | None = None) -> str:
     if v is None:
         raise FileNotFoundError(f"table has no commits: {table.path}")
     entries = table._snapshot_files(v)
-    target = table.read(version=v).schema
+    target = table.schema(v)
     if not entries:
         # TRUNCATE'd snapshot: the table layer serves it as a 0-row
         # typed DataFrame, and the catalog view must stay registrable

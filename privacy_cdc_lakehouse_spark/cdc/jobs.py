@@ -100,23 +100,14 @@ def bronze_high_watermark(lake: Lakehouse) -> int:
     at-least-once redelivery without a per-batch table scan."""
     if not lake.bronze.exists():
         return -1
-    files = lake.bronze._snapshot_files(lake.bronze.current_version())
-    hi = -1
-    stats_complete = True
-    for e in files:
-        if not e["stats"]:
-            stats_complete = False
-            break
-        for st in e["stats"].values():
-            mx = (st.get("offset") or {}).get("max")
-            if mx is None:
-                stats_complete = False
-                break
-            hi = max(hi, int(mx))
-        if not stats_complete:
-            break
-    if stats_complete:
-        return hi
+    stats = lake.bronze.column_minmax_from_stats("offset")
+    if stats is not None:
+        # An inexact max (excluded rows still count in footer stats) is
+        # an outer envelope: it can only route more records to the
+        # exact-membership anti-join, never drop a new one.
+        return int(stats[1]) if stats[1] is not None else -1
+    # None: some live file has no offset stats (a stats-less legacy
+    # dir), so only a scan knows the max.
     row = lake.bronze.read().agg(F.max("offset").alias("hi")).collect()[0]
     return int(row["hi"]) if row["hi"] is not None else -1
 

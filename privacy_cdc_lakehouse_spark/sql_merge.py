@@ -440,7 +440,7 @@ def sql_merge(
         else spark.table(p["source_view"])
     )
 
-    tgt_schema = target.read().schema  # one manifest/plan read
+    tgt_schema = target.schema()
     tgt_cols = [f.name for f in tgt_schema.fields]
     insert_values = None
     if p["insert_cols"] is not None:
@@ -877,7 +877,7 @@ def sql_dml(
         # every value is COERCED to the target column's type (a bare
         # `40.0` literal is a DECIMAL in Spark SQL and must land as the
         # target's double).
-        schema = {f.name: f.dataType for f in target.read().schema.fields}
+        schema = {f.name: f.dataType for f in target.schema().fields}
         if m.group("cols"):
             dest = [c.strip().replace("`", "") for c in _split_top_level(m.group("cols"))]
             unknown = set(dest) - set(schema)

@@ -14,6 +14,8 @@ provides the same table semantics Spark-first:
   snapshot-isolated and commits are atomic (O_EXCL log-file creation
   gives optimistic concurrency, the same protocol Delta Lake uses on a
   filesystem with atomic create).
+- The log also records the table schema (Delta's ``metaData``), so
+  readers never infer it from parquet (see ``LakeTable.schema``).
 - ``append`` adds a data dir + commits (no rewrite — O(new data)).
 - ``overwrite`` commits a manifest with only the new data dir — the
   atomic full-rebuild the reference gets from ``createOrReplace()``.
@@ -49,6 +51,7 @@ from __future__ import annotations
 
 import base64
 import datetime
+import functools
 import hashlib
 import json
 import os
@@ -135,7 +138,7 @@ def _dir_has_parquet(base: str) -> bool:
     partitioned write of an EMPTY frame emits no part files at all
     (an unpartitioned one emits a schema-bearing empty part), so
     zero-file data dirs are a legal artifact of empty-result rewrites
-    and must read as zero rows, not as a schema-inference error."""
+    and must count as zero rows, not as a schema-inference error."""
     for root, _dirs, names in os.walk(base):
         for n in names:
             if n.endswith(".parquet") and not n.startswith((".", "_")):
@@ -306,14 +309,13 @@ def _add_exclude(excludes: list[str], new: str) -> None:
     excludes.append(new)
 
 
-def _distributed_stats_threshold() -> int:
-    """File count above which commit-stats footer reads fan out as
-    Spark tasks instead of a serial driver walk. Read per call so tests
-    (and operators) can tune it without rebuilding sessions."""
-    try:
-        return int(os.environ.get("PCL_DISTRIBUTED_STATS_THRESHOLD", "64"))
-    except ValueError:
-        return 64
+# File count above which a commit's footer-stat reads fan out as Spark
+# tasks instead of a serial driver walk (see ``LakeTable._file_stats``).
+_DISTRIBUTED_STATS_THRESHOLD = 64
+
+# Every _CHECKPOINT_INTERVAL-th commit stores the full resolved file
+# list (see ``LakeTable._snapshot_files``).
+_CHECKPOINT_INTERVAL = 10
 
 
 def _footer_column_stats(full_path: str) -> dict[str, dict]:
@@ -456,14 +458,10 @@ class LakeTable:
     # store only a DELTA (add dirs / truncate / exclude-all predicate) —
     # O(batch) JSON instead of O(table files) per commit, which is what
     # keeps a high-cadence streaming merge log writable at 100 TB. Every
-    # PCL_CHECKPOINT_INTERVAL-th commit (and every overwrite, whose file
+    # _CHECKPOINT_INTERVAL-th commit (and every overwrite, whose file
     # list is one entry) stores the full resolved file list, bounding
     # replay to < interval deltas. Legacy full-list manifests read
     # unchanged (every one is a checkpoint).
-    @property
-    def _checkpoint_interval(self) -> int:
-        return max(1, int(os.environ.get("PCL_CHECKPOINT_INTERVAL", "10")))
-
     def _snapshot_files(self, version: int) -> list[dict]:
         """Resolved file-entry list at ``version``: nearest checkpoint at
         or before it, replayed forward through the delta tail."""
@@ -504,28 +502,79 @@ class LakeTable:
         )
         return m
 
-    # ---------------- table properties ----------------
+    # ---------------- carried log keys: properties, schema ----------------
+
+    def _carried(self, key: str, version: int | None):
+        """Value of a carried commit-log key at ``version`` (default:
+        current): the most recent manifest at or before it that records
+        ``key``. Every checkpoint embeds the carried keys, so a
+        checkpoint without ``key`` ends the walk with None — the walk is
+        bounded by the checkpoint interval, not the log length (it runs
+        on every write and every read)."""
+        v = version if version is not None else self.current_version()
+        while v is not None and v >= 1:
+            m = self._manifest(v)
+            if key in m:
+                return m[key]
+            if "files" in m:
+                return None
+            v -= 1
+        return None
 
     def properties(self, version: int | None = None) -> dict:
         """Table properties at ``version`` (default: current). Stored
         through the commit log (``set_properties`` writes the full
         merged dict), so properties are versioned and time-travelable
-        like everything else; the lookup walks back to the most recent
-        properties-bearing manifest."""
-        v = version if version is not None else self.current_version()
-        while v is not None and v >= 1:
-            m = self._manifest(v)
-            if "properties" in m:
-                return dict(m["properties"])
-            if "files" in m:
-                # Checkpoint without properties ⇒ properties were empty
-                # there (checkpoints embed non-empty properties), so the
-                # walk is bounded by the checkpoint interval — this
-                # lookup runs on EVERY write via the constraint/bloom
-                # gate and must not scale with log length.
-                return {}
-            v -= 1
-        return {}
+        like everything else."""
+        return dict(self._carried("properties", version) or {})
+
+    def schema(self, version: int | None = None) -> StructType:
+        """Table schema at ``version`` (default: current), as the log
+        records it — Delta's ``metaData`` / Iceberg's table-metadata
+        schema, so learning it reads manifests, never parquet. The
+        first data commit and every full replace record the schema of
+        what they wrote; commits that add dirs widen it (the columns
+        and types a by-name union of the dirs has). Raises
+        FileNotFoundError until a data commit has defined it."""
+        st = self._schema_at(
+            version if version is not None else self.current_version()
+        )
+        if st is None:
+            raise FileNotFoundError(f"table has no schema yet: {self.path}")
+        return st
+
+    def _schema_at(self, version: int | None) -> StructType | None:
+        if version is None:
+            return None
+        rec = self._carried("schema", version)
+        if isinstance(rec, dict):
+            return StructType.fromJson(rec)
+        # Legacy log, written before the schema was recorded: infer it
+        # once per call as the by-name union of the snapshot's non-empty
+        # dirs (one Spark job per dir). The next commit records it. An
+        # old TRUNCATE / empty rewrite left a JSON string under the key.
+        dfs = [
+            self._infer_read(e["path"])
+            for e in self._snapshot_files(version)
+            if _dir_has_parquet(os.path.join(self.path, e["path"]))
+        ]
+        if dfs:
+            return functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
+            ).schema
+        return StructType.fromJson(json.loads(rec)) if rec else None
+
+    def _infer_read(self, rel: str) -> DataFrame:
+        """Schema-inferring read of one dir, for legacy logs only."""
+        return self.spark.read.option("mergeSchema", "true").parquet(
+            os.path.join(self.path, rel)
+        )
+
+    def _empty(self, st: StructType) -> DataFrame:
+        """0-row DataFrame of schema ``st``, built on the JVM (no job)."""
+        return self.spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
+        )
 
     def set_properties(
         self, props: dict, _pre_commit: Callable[[], None] | None = None
@@ -603,7 +652,7 @@ class LakeTable:
         ``_bloom_excludes`` digit for digit."""
         if not files:
             return {}
-        df = self.spark.read.option("mergeSchema", "true").parquet(*files)
+        df = self.spark.read.parquet(*files)  # one write's files: one schema
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         # Only integer/string columns: the probe side needs a canonical
         # CAST-AS-STRING it can replicate (floats/temporals render
@@ -702,6 +751,7 @@ class LakeTable:
         partition_by: list[str] | None = None,
         delta: dict | None = None,
         extra: dict | None = None,
+        schema: StructType | None = None,
     ) -> int:
         """Atomically commit a snapshot manifest.
 
@@ -718,6 +768,13 @@ class LakeTable:
         ``add``) — applying it to the previous snapshot MUST reproduce
         ``build_files``' output. It is stored instead of the full list
         except on checkpoint versions; ``None`` forces a checkpoint.
+
+        ``schema`` is the reader schema of the dir(s) this commit
+        writes. A delta commit adds them to the prior snapshot, so it
+        widens the prior table schema by a by-name union; a full-list
+        commit replaces the schema. The table schema is recorded when
+        it changes, on every checkpoint, and on the first commit to a
+        legacy log that never recorded one.
         """
         os.makedirs(self._log_path, exist_ok=True)
         while True:
@@ -732,18 +789,34 @@ class LakeTable:
             }
             if extra:
                 body.update(extra)
+            prior = self._schema_at(current)
+            new = prior
+            if schema is not None:
+                new = (
+                    schema
+                    if delta is None or prior is None
+                    else self._empty(prior)
+                    .unionByName(self._empty(schema), allowMissingColumns=True)
+                    .schema
+                )
             # the first commit of a table is always a checkpoint (there
             # is no prior snapshot for a delta to apply to)
-            if (
+            checkpoint = (
                 delta is None
                 or latest is None
-                or version % self._checkpoint_interval == 0
+                or version % _CHECKPOINT_INTERVAL == 0
+            )
+            if new is not None and (
+                checkpoint
+                or new != prior
+                or not isinstance(self._carried("schema", current), dict)
             ):
+                body["schema"] = new.jsonValue()
+            if checkpoint:
                 body["files"] = files
                 # Carry properties into every checkpoint so the
                 # properties() walk-back is bounded by the checkpoint
-                # interval, not the log length — the constraint/bloom
-                # gate reads properties on every write.
+                # interval, not the log length.
                 if "properties" not in body:
                     props = self.properties(version - 1) if current else {}
                     if props:
@@ -876,7 +949,14 @@ class LakeTable:
                     f"CHECK constraint {name!r} violated: {expr}"
                 )
 
-    def _write_data_dir(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
+    def _write_data_dir(
+        self, df: DataFrame, partition_by: list[str] | None = None
+    ) -> tuple[dict, StructType]:
+        """Write ``df`` as a new data dir. Returns its manifest entry
+        (with footer stats) and the schema a reader sees there: the
+        written data columns, then the hive partition columns typed the
+        way partition discovery types them (a bigint partition column
+        reads back as int) — found by a driver-side listing, no job."""
         # Constraint gate: EVERY data write funnels through here, so
         # nothing unvalidated can land. Cost is one extra pass over the
         # written batch (Delta validates writes the same way); compact/
@@ -898,23 +978,36 @@ class LakeTable:
         }
         if constraints:
             self._check_rows(df, constraints)
+        spec = partition_by or []
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+        full = os.path.join(self.path, rel)
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.path, rel))
-        return rel
+        if spec:
+            writer = writer.partitionBy(*spec)
+        writer.parquet(full)
+        data = StructType([f for f in df.schema.fields if f.name not in spec])
+        st = self.spark.read.schema(data).parquet(full).schema
+        missing = [f for f in df.schema.fields if f.name not in st.names]
+        if missing:
+            # An empty partitioned write has no partition dirs to
+            # discover: keep the table's type for those columns.
+            known = self._schema_at(self.current_version())
+            for f in missing:
+                st = st.add(known[f.name] if known and f.name in known.names else f)
+        return {"path": rel, "excludes": [], "stats": self._file_stats(rel)}, st
 
-    def _write_change_dir(self, changes: DataFrame) -> str:
+    def _write_change_dir(self, changes: DataFrame) -> dict:
         """Write a Change Data Feed file set (rows + ``_change_type``)
         for one commit, BEFORE the manifest lands — like data dirs, a
         change dir is only visible once a manifest references it (a
         raced/crashed commit leaves an orphan that ``vacuum`` reaps).
         Change rows are O(changed rows) — micro-batch-sized, never
-        table-sized, which is what makes CDF affordable at 100 TB."""
+        table-sized, which is what makes CDF affordable at 100 TB.
+        Returns the manifest keys: the dir and the schema to read it
+        with."""
         rel = os.path.join(_CHANGE_DIR, uuid.uuid4().hex)
         changes.write.mode("overwrite").parquet(os.path.join(self.path, rel))
-        return rel
+        return {"change_data": rel, "change_schema": changes.schema.jsonValue()}
 
     def _file_stats(self, rel_dir: str) -> dict[str, dict]:
         """Per-file column min/max/null-count from parquet footers
@@ -924,25 +1017,19 @@ class LakeTable:
 
         Small commits (micro-batches) use a driver-side serial footer
         walk — O(new files), no job-scheduling overhead. Above
-        ``PCL_DISTRIBUTED_STATS_THRESHOLD`` files (default 64, the
-        many-thousand-file backfill case) the footer reads fan out as
-        Spark tasks automatically (the Delta model: stats come out of
-        the cluster, the driver only assembles the manifest) — a 100 TB
-        backfill commit never serializes footer reads on the driver.
-        ``PCL_DISTRIBUTED_STATS=1``/``0`` force either path."""
-        env = os.environ.get("PCL_DISTRIBUTED_STATS")
-        if env == "1":
-            return self._with_bloom_stats(self._file_stats_distributed(rel_dir))
+        ``_DISTRIBUTED_STATS_THRESHOLD`` files (the many-thousand-file
+        backfill case) the footer reads fan out as Spark tasks (the
+        Delta model: stats come out of the cluster, the driver only
+        assembles the manifest) — a 100 TB backfill commit never
+        serializes footer reads on the driver."""
         root = os.path.join(self.path, rel_dir)
         files = []
         for dirpath, _, names in os.walk(root):
             for name in names:
                 if name.endswith(".parquet"):
                     files.append(os.path.join(dirpath, name))
-        if env != "0" and len(files) > _distributed_stats_threshold():
-            return self._with_bloom_stats(
-                self._file_stats_distributed(rel_dir, files=files)
-            )
+        if len(files) > _DISTRIBUTED_STATS_THRESHOLD:
+            return self._with_bloom_stats(self._file_stats_distributed(files))
         return self._with_bloom_stats(
             {
                 os.path.relpath(full, self.path): _footer_column_stats(full)
@@ -1058,29 +1145,12 @@ class LakeTable:
                 out[fpath] = overlay
         return out if out is not None else stats
 
-    def _file_stats_distributed(
-        self, rel_dir: str, files: list[str] | None = None
-    ) -> dict[str, dict]:
-        """Stats via Spark jobs: one task walks the new data dir
-        (executor-side listing, skipped when the caller already has the
-        list), then footer reads fan out across the cluster. Only
-        (path, stats) pairs ever reach the driver."""
-        root = os.path.join(self.path, rel_dir)
+    def _file_stats_distributed(self, files: list[str]) -> dict[str, dict]:
+        """Stats via one Spark job: footer reads of ``files`` fan out
+        across the cluster. Only (path, stats) pairs reach the driver."""
         table_path = self.path
-        sc = self.spark.sparkContext
-
-        def list_files(r):
-            for dirpath, _, names in os.walk(r):
-                for name in names:
-                    if name.endswith(".parquet"):
-                        yield os.path.join(dirpath, name)
-
-        if files is None:
-            files = sc.parallelize([root], 1).flatMap(list_files).collect()
-        if not files:
-            return {}
         pairs = (
-            sc.parallelize(files, max(1, min(len(files), 64)))
+            self.spark.sparkContext.parallelize(files, min(len(files), 64))
             .map(
                 lambda full: (
                     os.path.relpath(full, table_path),
@@ -1129,24 +1199,16 @@ class LakeTable:
         v = version if version is not None else self.current_version()
         if v is None:
             raise FileNotFoundError(f"table has no commits: {self.path}")
-        files = self._snapshot_files(v)
+        st = self.schema(v)
         preds = _normalize_where(where) if where is not None else []
-        if not files:
-            # An empty snapshot only ever comes from TRUNCATE, which
-            # records the schema — serve a 0-row typed DataFrame (Delta
-            # contract: a truncated table stays queryable and writable).
-            empty = self._empty_snapshot_df(v)
-            if empty is None:
-                raise FileNotFoundError(f"table is empty at v{v}: {self.path}")
-            for c, op, val in preds:
-                empty = empty.filter(_OPS[op](F.col(c), val))
-            return empty
-        # Per-dir reads unioned by name: each data dir is its own
-        # partition-discovery root (a single multi-root read rejects
-        # hive-partitioned dirs), and unionByName(allowMissingColumns)
-        # reconciles additive schema evolution. mergeSchema covers
-        # mixed-schema files within one dir. compact() collapses the
-        # union when the dir list grows.
+        # Per-dir reads with the RECORDED schema (no inference job),
+        # unioned: each data dir is its own partition-discovery root (a
+        # single multi-root read rejects hive-partitioned dirs). A
+        # column a dir lacks reads as NULL, and a zero-file dir (an
+        # empty partitioned rewrite) as 0 typed rows. The select puts
+        # the columns in table order — an explicit-schema reader puts
+        # hive partition columns last. compact() collapses the union
+        # when the dir list grows.
         #
         # ``excludes`` are predicates from partition-scoped merges: rows
         # matching any exclude were superseded by a newer dir. When the
@@ -1155,26 +1217,17 @@ class LakeTable:
         # pruned at planning, not scanned-and-dropped.
         prune_preds = self._prunable_preds(preds) if preds else []
         dfs = []
-        for e in files:
+        for e in self._snapshot_files(v):
             base = os.path.join(self.path, e["path"])
-            # A ZERO-FILE dir is a legal manifest entry: a partitioned
-            # write of an empty frame emits no part files at all (an
-            # unpartitioned one emits a schema-bearing empty part), so a
-            # rewrite that keeps nothing — partitioned CoW delete-all,
-            # an empty-match row-level op after TRUNCATE — commits a
-            # dir Spark cannot infer a schema from. It contributes zero
-            # rows by definition: skip it (stats are authoritative when
-            # recorded; a physical walk covers stats-less entries).
-            if not e["stats"] and not _dir_has_parquet(base):
-                continue
-            reader = self.spark.read.option("mergeSchema", "true")
+            reader = self.spark.read.schema(st)
             if prune_preds and e["stats"]:
                 sview = self._stats_with_blooms(e["stats"], prune_preds)
                 keep = [
                     f
-                    for f, st in sview.items()
+                    for f, fst in sview.items()
                     if not any(
-                        _file_prunable(st, c, op, v) for c, op, v in prune_preds
+                        _file_prunable(fst, c, op, val)
+                        for c, op, val in prune_preds
                     )
                 ]
                 if not keep:
@@ -1189,46 +1242,11 @@ class LakeTable:
                 d = reader.parquet(base)
             for pred in e["excludes"]:
                 d = d.filter(~F.coalesce(F.expr(pred), F.lit(False)))
-            dfs.append(d)
-        if not dfs:
-            # Everything pruned: preserve the FULL evolved schema by
-            # limit(0)-scanning every non-empty dir (footer-only, no
-            # data read) — files[0] alone would drop columns added by
-            # later appends and break the read().filter(...)
-            # equivalence.
-            dfs = [
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(os.path.join(self.path, e["path"]))
-                .limit(0)
-                for e in files
-                if e["stats"] or _dir_has_parquet(os.path.join(self.path, e["path"]))
-            ]
-        if not dfs:
-            # every committed dir is physically empty: same contract as
-            # the files==[] snapshot — a typed 0-row frame
-            empty = self._empty_snapshot_df(v)
-            if empty is None:
-                raise FileNotFoundError(f"table is empty at v{v}: {self.path}")
-            for c, op, val in preds:
-                empty = empty.filter(_OPS[op](F.col(c), val))
-            return empty
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        for c, op, v in preds:
-            out = out.filter(_OPS[op](F.col(c), v))
+            dfs.append(d.select(*st.names))
+        out = functools.reduce(DataFrame.union, dfs) if dfs else self._empty(st)
+        for c, op, val in preds:
+            out = out.filter(_OPS[op](F.col(c), val))
         return out
-
-    def _empty_snapshot_df(self, version: int) -> DataFrame | None:
-        """0-row DataFrame with the schema recorded at or before
-        ``version`` (written by ``truncate``), or None if no schema was
-        ever recorded (legacy empty snapshot)."""
-        for vv in range(version, 0, -1):
-            m = self._manifest(vv)
-            if m.get("schema"):
-                st = StructType.fromJson(json.loads(m["schema"]))
-                return self.spark.createDataFrame([], st)
-        return None
 
     def version_as_of(self, ts: float) -> int:
         """Newest version committed at or before unix-epoch ``ts`` —
@@ -1305,8 +1323,13 @@ class LakeTable:
             op = m.get("op")
             ts = m.get("ts")
             if m.get("change_data"):
-                df = self.spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(self.path, m["change_data"])
+                cs = m.get("change_schema")
+                df = (
+                    self.spark.read.schema(StructType.fromJson(cs)).parquet(
+                        os.path.join(self.path, m["change_data"])
+                    )
+                    if cs
+                    else self._infer_read(m["change_data"])  # legacy log
                 )
                 parts.append(stamp(df, v, ts))
             elif op == "append":
@@ -1315,83 +1338,35 @@ class LakeTable:
                     if v > 1
                     else set()
                 )
-                added = [
-                    e["path"]
-                    for e in self._snapshot_files(v)
-                    if e["path"] not in prev
-                ]
-                for rel in added:
+                st = self.schema(v)
+                for e in self._snapshot_files(v):
+                    if e["path"] in prev:
+                        continue
                     df = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .parquet(os.path.join(self.path, rel))
+                        self.spark.read.schema(st)
+                        .parquet(os.path.join(self.path, e["path"]))
+                        .select(*st.names)
                         .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
                     )
                     parts.append(stamp(df, v, ts))
-            elif op == "truncate":
-                try:
-                    prior = self.read(version=v - 1) if v > 1 else None
-                except FileNotFoundError:
-                    prior = None
-                if prior is not None:
+            elif op in ("truncate", "overwrite", "clone", "restore"):
+                # v-1 as deletes (time travel supplies the preimage — no
+                # extra storage), then a replace's new snapshot as
+                # inserts. Delta computes restore CDF as the diff vs the
+                # prior head; this is the same shape as overwrite
+                # (consumers dedup by key downstream).
+                if v > 1 and self._schema_at(v - 1) is not None:
+                    prior = self.read(version=v - 1)
                     parts.append(
-                        stamp(
-                            prior.withColumn(
-                                CHANGE_TYPE_COL, F.lit("delete")
-                            ),
-                            v,
-                            ts,
-                        )
+                        stamp(prior.withColumn(CHANGE_TYPE_COL, F.lit("delete")), v, ts)
                     )
-            elif op in ("overwrite", "clone"):
-                prior = None
-                if v > 1:
-                    try:
-                        prior = self.read(version=v - 1)
-                    except FileNotFoundError:
-                        pass
-                if prior is not None:
+                if op != "truncate":
+                    post = self.read(version=v)
                     parts.append(
-                        stamp(
-                            prior.withColumn(
-                                CHANGE_TYPE_COL, F.lit("delete")
-                            ),
-                            v,
-                            ts,
-                        )
+                        stamp(post.withColumn(CHANGE_TYPE_COL, F.lit("insert")), v, ts)
                     )
-                parts.append(
-                    stamp(
-                        self.read(version=v).withColumn(
-                            CHANGE_TYPE_COL, F.lit("insert")
-                        ),
-                        v,
-                        ts,
-                    )
-                )
             elif op in ("compact", "vacuum", "setproperties"):
                 continue  # file layout / metadata changed, rows did not
-            elif op == "restore":
-                # Delta computes restore CDF as the diff vs the prior
-                # head; both snapshots are time-travelable here — v-1 as
-                # deletes, the restored state as inserts (same shape as
-                # overwrite; consumers dedup by key downstream).
-                prior = self.read(version=v - 1)
-                parts.append(
-                    stamp(
-                        prior.withColumn(CHANGE_TYPE_COL, F.lit("delete")),
-                        v,
-                        ts,
-                    )
-                )
-                parts.append(
-                    stamp(
-                        self.read(version=v).withColumn(
-                            CHANGE_TYPE_COL, F.lit("insert")
-                        ),
-                        v,
-                        ts,
-                    )
-                )
             else:
                 raise ValueError(
                     f"commit v{v} ({op}) did not record change data; "
@@ -1400,10 +1375,8 @@ class LakeTable:
                 )
         if not parts:
             # nothing row-changing in range: empty frame, CDF schema
-            base = self.read(version=end).limit(0)
-            return stamp(
-                base.withColumn(CHANGE_TYPE_COL, F.lit("")), end, None
-            ).limit(0)
+            empty = self._empty(self.schema(end))
+            return stamp(empty.withColumn(CHANGE_TYPE_COL, F.lit("")), end, None)
         out = parts[0]
         for d in parts[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -1625,7 +1598,9 @@ class LakeTable:
                 )
             return entries
 
-        clone._commit(build, "clone", snap.get("partition_by", []))
+        clone._commit(
+            build, "clone", snap.get("partition_by", []), schema=self._schema_at(v)
+        )
         return clone
 
     def history(self) -> list[dict]:
@@ -1693,16 +1668,10 @@ class LakeTable:
         carrying its pipeline ``op`` column would leak it into the
         table. Appends inherit the table's partitioning spec."""
         v = self.current_version()
-        spec: list[str] = []
-        existing = None
-        if v is not None:
-            spec = self._manifest(v).get("partition_by", [])
-            try:
-                existing = self.read(version=v).schema
-            except FileNotFoundError:
-                # a properties-only commit on a fresh table: no data, no
-                # recorded schema — the first data batch defines it
-                existing = None
+        spec = self._manifest(v).get("partition_by", []) if v is not None else []
+        # None until a data commit (a properties-only commit on a fresh
+        # table defines no schema): the first data batch defines it
+        existing = self._schema_at(v)
         if existing is not None:
             if merge_schema:
                 incoming = set(df.columns)
@@ -1717,15 +1686,14 @@ class LakeTable:
                         f"{sorted(extra)}; pass merge_schema=True to evolve "
                         f"the schema"
                     )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
+        new_entry, st = self._write_data_dir(df, spec)
         return self._commit(
             lambda latest: ([_entry(e) for e in latest["files"]] if latest else [])
             + [new_entry],
             "append",
             spec,
             delta={"add": [new_entry]},
+            schema=st,
         )
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
@@ -1740,41 +1708,25 @@ class LakeTable:
             if partition_by is not None
             else (self._manifest(v).get("partition_by", []) if v is not None else [])
         )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
+        entry, st = self._write_data_dir(df, spec)
         # delta=None: an overwrite's full list is one entry, so every
         # overwrite is a (free) checkpoint that resets the replay chain.
-        return self._commit(
-            lambda latest: [{"path": rel, "excludes": [], "stats": stats}],
-            "overwrite",
-            spec,
-        )
+        return self._commit(lambda latest: [entry], "overwrite", spec, schema=st)
 
     def truncate(self) -> int:
         """``TRUNCATE TABLE``: commit an empty snapshot WITHOUT touching
         data files — prior versions stay time-travelable until
         ``vacuum`` reclaims them (the Delta TRUNCATE contract). Stored
         as an O(1) ``truncate`` action in the commit log (the delta
-        replay resets the file list and applies the tail). The current
-        schema is recorded in the manifest so the truncated table stays
-        READABLE (empty DataFrame, full schema) and every DML op —
-        INSERT/append, MERGE, DELETE, UPDATE — keeps working on it,
-        exactly as Delta's TRUNCATE leaves a queryable 0-row table."""
+        replay resets the file list and applies the tail). The schema
+        carries over in the log, so the truncated table stays READABLE
+        (empty DataFrame, full schema) and every DML op — INSERT/append,
+        MERGE, DELETE, UPDATE — keeps working on it, exactly as Delta's
+        TRUNCATE leaves a queryable 0-row table."""
         v = self.current_version()
-        spec: list[str] = []
-        schema_json = None
-        if v is not None:
-            spec = self._manifest(v).get("partition_by", [])
-            try:
-                schema_json = self.read(version=v).schema.json()
-            except FileNotFoundError:
-                pass  # truncating an already-empty table: inherit below
+        spec = self._manifest(v).get("partition_by", []) if v is not None else []
         return self._commit(
-            lambda latest: [],
-            "truncate",
-            spec,
-            delta={"truncate": True},
-            extra={"schema": schema_json} if schema_json else None,
+            lambda latest: [], "truncate", spec, delta={"truncate": True}
         )
 
     def compact(
@@ -1898,6 +1850,7 @@ class LakeTable:
             "restore",
             spec,
             extra={"restored_from": version},
+            schema=self._schema_at(version),
         )
 
     def vacuum(
@@ -2046,11 +1999,9 @@ class LakeTable:
             src = self.read(version=base_v)
             if partition_filter is not None:
                 src = src.filter(F.expr(partition_filter))
-            extra = {
-                "change_data": self._write_change_dir(
-                    src.filter(hit).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-                )
-            }
+            extra = self._write_change_dir(
+                src.filter(hit).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+            )
         if partition_filter is None:
             version = self._overwrite_checked(
                 kept, base_v, "delete", extra=extra
@@ -2077,8 +2028,7 @@ class LakeTable:
         v = self.current_version()
         if v is None:
             raise FileNotFoundError(f"table has no commits: {self.path}")
-        cols = set(self.read(version=v).columns)
-        unknown = set(partition_by) - cols
+        unknown = set(partition_by) - set(self.schema(v).names)
         if unknown:
             raise ValueError(
                 f"partition columns not in table: {sorted(unknown)}"
@@ -2152,13 +2102,9 @@ class LakeTable:
         n_deleted = base.filter(hit).count() if return_count else None
         extra = None
         if write_change_data:
-            extra = {
-                "change_data": self._write_change_dir(
-                    base.filter(hit).withColumn(
-                        CHANGE_TYPE_COL, F.lit("delete")
-                    )
-                )
-            }
+            extra = self._write_change_dir(
+                base.filter(hit).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+            )
 
         def build(latest: dict | None) -> list[dict]:
             prior = [_entry(e) for e in latest["files"]] if latest else []
@@ -2252,9 +2198,7 @@ class LakeTable:
                     for c in source.columns
                 ]
             ).withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-            extra = {
-                "change_data": self._write_change_dir(pre.unionByName(post))
-            }
+            extra = self._write_change_dir(pre.unionByName(post))
         if partition_filter is None:
             return self._overwrite_checked(
                 updated, base_v, "update", extra=extra
@@ -2311,19 +2255,14 @@ class LakeTable:
             ]
         )
         spec = self._manifest(base_v).get("partition_by", [])
-        rel = self._write_data_dir(updated, spec)
-        stats = self._file_stats(rel)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
-        extra = self._empty_write_extra(updated, rel, None)
+        new_entry, st = self._write_data_dir(updated, spec)
+        extra = None
         if write_change_data:
             pre = hit_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
             post = updated.withColumn(
                 CHANGE_TYPE_COL, F.lit("update_postimage")
             )
-            extra = {
-                **(extra or {}),
-                "change_data": self._write_change_dir(pre.unionByName(post)),
-            }
+            extra = self._write_change_dir(pre.unionByName(post))
 
         def build(latest: dict | None) -> list[dict]:
             prior = [_entry(e) for e in latest["files"]] if latest else []
@@ -2337,6 +2276,7 @@ class LakeTable:
             spec,
             delta={"exclude_all": pred, "add": [new_entry]},
             extra=extra,
+            schema=st,
         )
 
     def _filter_may_match_entry(
@@ -2422,13 +2362,9 @@ class LakeTable:
         # rewrite is micro-batch + touched-slice sized by contract; the
         # full-table overwrite path keeps the caller's layout (a 100 TB
         # rebuild must not funnel each partition through one task).
-        # PCL_OPTIMIZE_WRITE=0 restores the pass-through layout.
-        if spec and os.environ.get("PCL_OPTIMIZE_WRITE") != "0":
+        if spec:
             rewritten = rewritten.repartition(*[F.col(c) for c in spec])
-        rel = self._write_data_dir(rewritten, spec)
-        stats = self._file_stats(rel)
-        extra = self._empty_write_extra(rewritten, rel, extra)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
+        new_entry, st = self._write_data_dir(rewritten, spec)
 
         def build(latest: dict | None) -> list[dict]:
             prior = [_entry(e) for e in latest["files"]] if latest else []
@@ -2467,6 +2403,7 @@ class LakeTable:
             spec,
             delta={"exclude_all": partition_filter, "add": [new_entry]},
             extra=extra,
+            schema=st,
         )
 
     def _overwrite_checked(
@@ -2496,9 +2433,7 @@ class LakeTable:
             if base_version is not None
             else []
         )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
-        extra = self._empty_write_extra(df, rel, extra)
+        entry, st = self._write_data_dir(df, spec)
 
         def build(latest: dict | None) -> list[dict]:
             prior_paths = (
@@ -2510,20 +2445,9 @@ class LakeTable:
                     f"commit (file set changed); retry against the new "
                     f"snapshot"
                 )
-            return [{"path": rel, "excludes": [], "stats": stats}]
+            return [entry]
 
-        return self._commit(build, op, spec, extra=extra)
-
-    def _empty_write_extra(
-        self, df: DataFrame, rel: str, extra: dict | None
-    ) -> dict | None:
-        """When a rewrite produced a ZERO-FILE dir (empty partitioned
-        write), record the frame's schema in the commit — the same key
-        TRUNCATE writes — so a snapshot whose every dir is empty still
-        serves a typed 0-row read."""
-        if _dir_has_parquet(os.path.join(self.path, rel)):
-            return extra
-        return {**(extra or {}), "schema": json.dumps(df.schema.jsonValue())}
+        return self._commit(build, op, spec, extra=extra, schema=st)
 
     # ---------------- merge ----------------
 
@@ -2877,7 +2801,7 @@ class LakeTable:
                 changes = changes.unionByName(
                     ct(nmbs_upd_pre, "update_preimage")
                 ).unionByName(ct(nmbs_upd_post, "update_postimage"))
-            extra = {"change_data": self._write_change_dir(changes)}
+            extra = self._write_change_dir(changes)
 
         if partition_filter is None:
             return self._overwrite_checked(merged, base_v, "merge", extra=extra)

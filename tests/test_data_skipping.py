@@ -174,16 +174,18 @@ def test_mixed_date_datetime_literal_not_mispruned(spark, tmp_path):
 
 
 def test_distributed_stats_match_driver_walk(spark, tmp_path, monkeypatch):
-    """PCL_DISTRIBUTED_STATS=1 computes identical manifest stats via
-    Spark tasks (no driver-side footer walk) — data skipping behaves
-    the same under either collection path."""
+    """Threshold 0 forces the distributed path: identical manifest
+    stats via Spark tasks (no driver-side footer walk) — data skipping
+    behaves the same under either collection path."""
+    from privacy_cdc_lakehouse_spark import tables as T
+
     t_drv = _mk(spark, tmp_path, "stats_driver")
     t_drv.append(spark.range(0, 1000).coalesce(2))
 
-    monkeypatch.setenv("PCL_DISTRIBUTED_STATS", "1")
+    monkeypatch.setattr(T, "_DISTRIBUTED_STATS_THRESHOLD", 0)
     t_dist = _mk(spark, tmp_path, "stats_dist")
     t_dist.append(spark.range(0, 1000).coalesce(2))
-    monkeypatch.delenv("PCL_DISTRIBUTED_STATS")
+    monkeypatch.undo()
 
     def stats_of(t):
         from privacy_cdc_lakehouse_spark.tables import _entry
@@ -203,7 +205,7 @@ def test_distributed_stats_match_driver_walk(spark, tmp_path, monkeypatch):
 def test_distributed_stats_auto_switch_above_threshold(
     spark, tmp_path, monkeypatch
 ):
-    """Above PCL_DISTRIBUTED_STATS_THRESHOLD files a commit's footer
+    """Above _DISTRIBUTED_STATS_THRESHOLD files a commit's footer
     reads fan out as Spark tasks AUTOMATICALLY (no env opt-in) — a
     backfill commit must never serialize thousands of footer reads on
     the driver — and yield stats identical to the driver walk."""
@@ -212,12 +214,12 @@ def test_distributed_stats_auto_switch_above_threshold(
     calls = {"dist": 0}
     orig = T.LakeTable._file_stats_distributed
 
-    def spy(self, rel_dir, files=None):
+    def spy(self, files):
         calls["dist"] += 1
-        return orig(self, rel_dir, files)
+        return orig(self, files)
 
     monkeypatch.setattr(T.LakeTable, "_file_stats_distributed", spy)
-    monkeypatch.setenv("PCL_DISTRIBUTED_STATS_THRESHOLD", "4")
+    monkeypatch.setattr(T, "_DISTRIBUTED_STATS_THRESHOLD", 4)
 
     # 8 files > threshold 4 -> auto-distributed
     t_auto = _mk(spark, tmp_path, "stats_auto")
@@ -225,11 +227,11 @@ def test_distributed_stats_auto_switch_above_threshold(
     assert calls["dist"] == 1
 
     # forced driver path on the same data: identical stats dicts
-    monkeypatch.setenv("PCL_DISTRIBUTED_STATS", "0")
+    monkeypatch.setattr(T, "_DISTRIBUTED_STATS_THRESHOLD", 1 << 30)
     t_drv = _mk(spark, tmp_path, "stats_auto_drv")
     t_drv.append(spark.range(0, 1000).repartition(8))
     assert calls["dist"] == 1  # driver path did not fan out
-    monkeypatch.delenv("PCL_DISTRIBUTED_STATS")
+    monkeypatch.setattr(T, "_DISTRIBUTED_STATS_THRESHOLD", 4)
 
     def stats_of(t):
         from privacy_cdc_lakehouse_spark.tables import _entry

@@ -8,8 +8,8 @@ design rules that a runtime test cannot see until it is too late.
 - ``cdc/jobs.py`` runs once per micro-batch and builds its literal rows
   on the JVM: a ``createDataFrame`` row is a Python RDD, so every job
   reading it starts Python workers, on every batch.
-- Environment variables are read only for deployment settings and test
-  hooks named in ``ENV_ALLOWLIST``; every other behaviour is a Spark conf
+- Environment variables are read only for the deployment settings and
+  the secret named in ``ENV_ALLOWLIST``; every other behaviour is a Spark conf
   or a function argument, so there are no hidden process-wide knobs."""
 
 from __future__ import annotations
@@ -32,11 +32,6 @@ ENV_ALLOWLIST = {
     ("session.py", "SPARK_DRIVER_MEMORY"),
     # pseudonymization salt (a secret, so never a Spark conf)
     (os.path.join("functions", "scalars.py"), "PII_SALT"),
-    # lake-layer test hooks: force or tune code paths on tiny fixtures
-    ("tables.py", "PCL_DISTRIBUTED_STATS_THRESHOLD"),
-    ("tables.py", "PCL_CHECKPOINT_INTERVAL"),
-    ("tables.py", "PCL_DISTRIBUTED_STATS"),
-    ("tables.py", "PCL_OPTIMIZE_WRITE"),
 }
 # os.environ.get("X"), os.environ["X"], os.getenv("X"); a read whose
 # variable is not a literal on the same line captures None, which no

@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from privacy_cdc_lakehouse_spark import tables as T
 from privacy_cdc_lakehouse_spark.tables import LakeTable, MergeError
 
 
@@ -215,7 +216,7 @@ def test_commit_log_deltas_and_checkpoint_replay(spark, tmp_path, monkeypatch, i
     model. Parametrized over interval=1 (every commit a checkpoint —
     the legacy full-manifest shape), 4 (mixed), and 100 (one checkpoint
     + a long delta tail)."""
-    monkeypatch.setenv("PCL_CHECKPOINT_INTERVAL", str(interval))
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", interval)
     t = LakeTable(spark, str(tmp_path / f"ckpt{interval}"))
     t.overwrite(
         spark.createDataFrame(
@@ -458,7 +459,7 @@ def test_truncate_delta_replay_and_time_travel(spark, tmp_path, monkeypatch):
     """TRUNCATE TABLE is an O(1) `truncate` delta action: the replay
     resets the file list mid-chain, later appends apply on top, and
     pre-truncate versions stay time-travelable (data files untouched)."""
-    monkeypatch.setenv("PCL_CHECKPOINT_INTERVAL", "100")  # keep it a delta
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", 100)  # keep it a delta
     t = LakeTable(spark, str(tmp_path / "trunc"))
     t.append(spark.createDataFrame([(1, "a")], "id int, s string"))
     t.append(spark.createDataFrame([(2, "b")], "id int, s string"))
@@ -469,7 +470,12 @@ def test_truncate_delta_replay_and_time_travel(spark, tmp_path, monkeypatch):
     # (Delta's TRUNCATE contract) — and therefore writable via every
     # DML path that reads the schema first
     empty = t.read(version=v_trunc)
-    assert empty.columns == ["id", "s"] and empty.count() == 0
+    assert empty.dtypes == [("id", "int"), ("s", "string")] and empty.count() == 0
+    # the schema carries over in the log: TRUNCATE records nothing new,
+    # and a filtered read of the empty snapshot is the same typed frame
+    assert "schema" not in t._manifest(v_trunc)
+    assert t.schema(v_trunc) == t.schema(v_trunc - 1)
+    assert t.read(version=v_trunc, where=("id", "=", 1)).dtypes == empty.dtypes
     t.append(spark.createDataFrame([(3, "c")], "id int, s string"))
 
     # v4 replays: ckpt(v1) + add(v2) + truncate(v3) + add(v4)
@@ -487,7 +493,7 @@ def test_commit_race_rebases_onto_checkpoint_version(spark, tmp_path, monkeypatc
     commit lands exactly on a checkpoint version (full-manifest shape):
     the loser rebases onto the resolved checkpoint, and its own commit
     (now past the boundary) is a delta applied on top of it."""
-    monkeypatch.setenv("PCL_CHECKPOINT_INTERVAL", "2")
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", 2)
     t = LakeTable(spark, str(tmp_path / "race_ckpt"))
     t.append(spark.createDataFrame([(1, "a")], "id int, s string"))  # v1 ckpt
 
@@ -516,7 +522,7 @@ def test_vacuum_with_delta_tail(spark, tmp_path, monkeypatch):
     every retained version must survive (including delta commits that
     replay across the checkpoint boundary), and only dirs referenced by
     NO retained snapshot are reclaimed."""
-    monkeypatch.setenv("PCL_CHECKPOINT_INTERVAL", "4")
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", 4)
     t = LakeTable(spark, str(tmp_path / "vac_delta"))
     t.overwrite(spark.createDataFrame([(1, "a")], "id int, s string"))  # v1 A
     t.append(spark.createDataFrame([(2, "b")], "id int, s string"))     # v2 +B
@@ -615,7 +621,9 @@ def test_concurrent_appends_from_real_threads(spark, tmp_path):
 def test_legacy_v1_string_manifest_reads(spark, tmp_path):
     """A v1 manifest whose files are plain strings (no excludes/stats)
     still reads, appends, and data-skips (stats-less files are never
-    pruned — soundness over optimization)."""
+    pruned — soundness over optimization). A log written before the
+    schema was recorded reads identically (the schema is inferred),
+    and its next commit records the schema."""
     import json as _json
     import os as _os
 
@@ -635,6 +643,34 @@ def test_legacy_v1_string_manifest_reads(spark, tmp_path):
     assert read == total  # no stats -> nothing prunable, nothing lost
     t.append(spark.createDataFrame([(2, "b")], "id int, s string"))
     assert _rows(t) == [(1, "a"), (2, "b")]
+
+    # a partitioned log with an evolved schema, then every recorded
+    # schema stripped: the legacy shape
+    lt = LakeTable(spark, str(tmp_path / "legacy_schema"))
+    lt.overwrite(
+        spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "id long, p long, s string"),
+        partition_by=["p"],
+    )
+    lt.append(
+        spark.createDataFrame([(3, 1, "c", 0.5)], "id long, p long, s string, x double"),
+        merge_schema=True,
+    )
+    v = lt.current_version()
+    before = [(df.dtypes, sorted(map(tuple, df.collect()))) for df in (lt.read(), lt.read(1))]
+    log = _os.path.join(lt.path, "_log")
+    for name in _os.listdir(log):
+        with open(_os.path.join(log, name)) as f:
+            m = _json.load(f)
+        m.pop("schema", None)
+        with open(_os.path.join(log, name), "w") as f:
+            _json.dump(m, f)
+    assert all("schema" not in lt._manifest(kv) for kv in range(1, v + 1))
+    after = [(df.dtypes, sorted(map(tuple, df.collect()))) for df in (lt.read(), lt.read(1))]
+    assert after == before
+    assert lt.schema().simpleString() == "struct<id:bigint,s:string,p:int,x:double>"
+    lt.append(spark.createDataFrame([(4, 0, "d")], "id long, p long, s string"))
+    assert lt._manifest(v + 1)["schema"] == lt.schema(v).jsonValue()
+    assert lt.read().dtypes == before[0][0]
 
 
 def test_vacuum_min_age_protects_inflight_dirs(spark, tmp_path):
@@ -1292,30 +1328,28 @@ def test_check_constraint_sql_verbs(spark, tmp_path):
     assert len(_rows(t)) == 2
 
 
-def test_properties_survive_checkpoints_bounded_walk(spark, tmp_path):
+def test_properties_survive_checkpoints_bounded_walk(spark, tmp_path, monkeypatch):
     """Checkpoints embed non-empty properties, so (a) properties set
     long ago stay visible past many checkpoint rotations and (b) the
     walk-back terminates at the first checkpoint — it runs on every
     write via the constraint/bloom gate and must not scale with log
-    length."""
-    import os
-
-    os.environ["PCL_CHECKPOINT_INTERVAL"] = "5"
-    try:
-        t = LakeTable(spark, str(tmp_path / "props_ckpt"))
-        t.overwrite(spark.createDataFrame([(0,)], "id int"))
-        t.set_properties({"owner": "dq"})
-        for i in range(1, 13):  # crosses two checkpoint boundaries
-            t.append(spark.createDataFrame([(i,)], "id int"))
-        assert t.properties()["owner"] == "dq"
-        # the latest checkpoint manifest itself carries the properties
-        v = t.current_version()
-        ckpt = max(
-            kv for kv in range(1, v + 1) if "files" in t._manifest(kv)
-        )
-        assert t._manifest(ckpt).get("properties", {}).get("owner") == "dq"
-    finally:
-        del os.environ["PCL_CHECKPOINT_INTERVAL"]
+    length. The schema is carried the same way: checkpoints embed it,
+    and a delta commit that does not change it records nothing."""
+    monkeypatch.setattr(T, "_CHECKPOINT_INTERVAL", 5)
+    t = LakeTable(spark, str(tmp_path / "props_ckpt"))
+    t.overwrite(spark.createDataFrame([(0,)], "id int"))
+    t.set_properties({"owner": "dq"})
+    for i in range(1, 13):  # crosses two checkpoint boundaries
+        t.append(spark.createDataFrame([(i,)], "id int"))
+    assert t.properties()["owner"] == "dq"
+    # the latest checkpoint manifest itself carries the properties
+    v = t.current_version()
+    ckpt = max(
+        kv for kv in range(1, v + 1) if "files" in t._manifest(kv)
+    )
+    assert t._manifest(ckpt).get("properties", {}).get("owner") == "dq"
+    assert t._manifest(ckpt)["schema"] == t.schema().jsonValue()
+    assert "schema" not in t._manifest(v) and "delta" in t._manifest(v)
 
 
 def test_merge_nmbs_respects_partition_filter(spark, tmp_path):
@@ -1640,3 +1674,89 @@ def test_column_minmax_from_stats_string_never_exact(spark, tmp_path):
     assert lo <= row["lo"] and hi >= row["hi"]
     # numeric columns on the same table keep the exact fast path
     assert t.column_minmax_from_stats("k") == (0, 9, True)
+
+
+def _jobs_in_group(spark, group, fn):
+    """(result of ``fn()``, Spark jobs it started), counted via the
+    status tracker under a dedicated job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_and_schema_checks_start_no_job(spark, tmp_path):
+    """The schema rides the commit log, so building a read (snapshot,
+    pruned or change feed) or checking a batch against the schema
+    starts no Spark job at any table history — and the recorded schema gives the same rows, column
+    order and types as the per-dir schema-inferring union it replaces:
+    partition columns typed by discovery (a bigint written reads back
+    as int), an evolved column after them, zero-file dirs empty."""
+    import functools
+    import os
+
+    from privacy_cdc_lakehouse_spark.tables import _dir_has_parquet
+
+    schema = "id long, p long, s string"
+    t = LakeTable(spark, str(tmp_path / "nojob"))
+    t.overwrite(
+        spark.createDataFrame([(0, 0, "a0"), (1, 1, "a1")], schema),
+        partition_by=["p"],
+    )
+    for i in range(2, 5):
+        t.append(spark.createDataFrame([(i, i % 3, f"a{i}")], schema))
+    t.append(
+        spark.createDataFrame([(5, 2, "a5", 0.5)], schema + ", x double"),
+        merge_schema=True,
+    )
+    t.merge(  # partition-scoped: prior dirs get an exclude on p = 1
+        spark.createDataFrame([(1, 1, "m1"), (7, 1, "m7")], schema),
+        keys=["id"],
+        partition_filter="p = 1",
+    )
+    t.delete_where("p = 2", partition_filter="p = 2")  # a zero-file dir
+    t.append(spark.createDataFrame([(8, 0, "a8")], schema))
+    v = t.current_version()
+    files = t._snapshot_files(v)
+    assert len(files) == 8 and any(e["excludes"] for e in files)
+    assert not _dir_has_parquet(os.path.join(t.path, files[-2]["path"]))
+    bad = spark.createDataFrame([(9, 0, "b", 1)], schema + ", y int")
+    where = [("id", ">", 3)]
+
+    def build():
+        with pytest.raises(ValueError, match="columns the table lacks"):
+            t.append(bad)  # append's schema check
+        t.read_changes(2, 5)  # the appends, as inserts
+        return t.read(), t.read(where=where), t.schema(), t.schema(v - 2)
+
+    (full, pruned, st, st_mid), jobs = _jobs_in_group(spark, "lake_read_build", build)
+    assert jobs == 0
+
+    def inferred(version):
+        dfs = []
+        for e in t._snapshot_files(version):
+            base = os.path.join(t.path, e["path"])
+            if not _dir_has_parquet(base):
+                continue
+            d = spark.read.option("mergeSchema", "true").parquet(base)
+            for pred in e["excludes"]:
+                d = d.filter(~F.coalesce(F.expr(pred), F.lit(False)))
+            dfs.append(d)
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
+        )
+
+    want = inferred(v)
+    assert st == full.schema and st_mid == inferred(v - 2).schema
+    assert full.dtypes == want.dtypes == [
+        ("id", "bigint"), ("s", "string"), ("p", "int"), ("x", "double"),
+    ]
+    assert pruned.dtypes == want.dtypes
+    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, want.collect()))
+    assert sorted(map(tuple, pruned.collect())) == sorted(
+        map(tuple, want.filter(F.col("id") > 3).collect())
+    )
