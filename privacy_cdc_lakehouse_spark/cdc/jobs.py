@@ -416,7 +416,7 @@ def _advance_checkpoint(lake: Lakehouse, offset: int) -> None:
     ``pipeline``. The table holds one row per pipeline, so the MERGE is
     a checked rewrite: drop this pipeline's row (``eqNullSafe``, like
     MERGE's ``<=>`` keys, keeps a NULL-pipeline row), add the new one,
-    and commit through ``_overwrite_checked``, which raises
+    and commit through ``_commit_rewrite``, which raises
     ``ConcurrentWriteError`` if another commit landed after ``base``.
     The row is built on the JVM: a ``createDataFrame`` row is a Python
     RDD, and every job reading it would start Python workers."""
@@ -433,4 +433,4 @@ def _advance_checkpoint(lake: Lakehouse, offset: int) -> None:
     kept = table.read(version=base).filter(
         ~F.col("pipeline").eqNullSafe(F.lit(PIPELINE))
     )
-    table._overwrite_checked(kept.unionByName(row), base, "merge")
+    table._commit_rewrite(kept.unionByName(row), base, "merge")

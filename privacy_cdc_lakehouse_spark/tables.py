@@ -1472,45 +1472,13 @@ class LakeTable:
             for f in e["stats"]:
                 if not os.path.isfile(os.path.join(self.path, f)):
                     missing_stat_files.append(f)
-        referenced = set()
-        referenced_changes = set()
-        referenced_blooms = set()
-        for kv in range(1, v + 1):
-            try:
-                for x in self._snapshot_files(kv):
-                    referenced.add(x["path"])
-                    for st in x["stats"].values():
-                        for cst in st.values():
-                            ref = (
-                                cst.get("bloom_ref")
-                                if isinstance(cst, dict)
-                                else None
-                            )
-                            if ref:
-                                referenced_blooms.add(
-                                    os.path.dirname(ref["path"])
-                                )
-            except RuntimeError:
-                pass
-            cd = self._manifest(kv).get("change_data")
-            if cd:
-                referenced_changes.add(cd)
-        orphan_dirs = []
-        for root_dir, ref in (
-            (_DATA_DIR, referenced),
-            (_CHANGE_DIR, referenced_changes),
-            (_BLOOM_DIR, referenced_blooms),
-        ):
-            abs_root = os.path.join(self.path, root_dir)
-            for d in os.listdir(abs_root) if os.path.isdir(abs_root) else []:
-                rel = os.path.join(root_dir, d)
-                if rel not in ref:
-                    orphan_dirs.append(rel)
         return {
             "version": v,
             "missing_dirs": sorted(missing_dirs),
             "missing_stat_files": sorted(missing_stat_files),
-            "orphan_dirs": sorted(orphan_dirs),
+            "orphan_dirs": sorted(
+                self._unreferenced_dirs(range(1, v + 1), strict=False)
+            ),
             "ok": not missing_dirs and not missing_stat_files,
         }
 
@@ -1781,11 +1749,7 @@ class LakeTable:
             df = df.coalesce(target_partitions)
         # Checked commit: OPTIMIZE must never throw away a concurrent
         # append's rows (read-modify-write, not an atomic replace).
-        if partition_filter is not None:
-            return self._commit_partition_scoped(
-                df, partition_filter, "compact", base_version=base_v
-            )
-        return self._overwrite_checked(df, base_v, "compact")
+        return self._commit_rewrite(df, base_v, "compact", partition_filter)
 
     def _zorder_key(self, df: DataFrame, cols: list[str], bits: int = 6) -> Column:
         """Morton (Z-curve) key: per-column quantile rank (2^bits bins
@@ -1873,51 +1837,62 @@ class LakeTable:
         if v is None:
             return []
         keep_versions = range(max(1, v - retain_last + 1), v + 1)
-        referenced = set()
-        for kv in keep_versions:
-            referenced.update(e["path"] for e in self._snapshot_files(kv))
-        # Change Data Feed files follow the same horizon: change dirs
-        # referenced by a RETAINED version's manifest stay (the feed for
-        # those versions remains readable); older or orphaned (raced /
-        # crashed commit) dirs are reclaimed behind the same in-flight
-        # age guard.
-        referenced_changes = set()
-        for kv in keep_versions:
-            cd = self._manifest(kv).get("change_data")
-            if cd:
-                referenced_changes.add(cd)
-        # Bloom sidecars follow the same horizon: a sidecar dir is live
-        # while any RETAINED version's stats reference it.
-        referenced_blooms = set()
-        for kv in keep_versions:
-            for e in self._snapshot_files(kv):
+        removed = []
+        now = time.time()
+        for rel in self._unreferenced_dirs(keep_versions, strict=True):
+            full = os.path.join(self.path, rel)
+            try:
+                age = now - os.path.getmtime(full)
+            except OSError:
+                continue
+            if age < min_age_seconds:
+                continue  # possibly an in-flight writer's uncommitted dir
+            shutil.rmtree(full, ignore_errors=True)
+            removed.append(rel)
+        return removed
+
+    def _unreferenced_dirs(self, versions: range, strict: bool) -> list[str]:
+        """On-disk data, change-data and bloom-sidecar dirs that no
+        snapshot in ``versions`` references: ``vacuum``'s candidates,
+        ``fsck``'s orphans (also what a raced or crashed writer
+        leaves). Change dirs follow the same horizon as data dirs (the
+        feed of a retained version stays readable), and a sidecar dir
+        is live while a retained version's stats reference it.
+
+        A version whose snapshot cannot be resolved (a corrupt log
+        chain) raises under ``strict`` — vacuum must not treat it as
+        empty and delete the dirs it still holds — and otherwise
+        contributes only its change dir (fsck reports what it can)."""
+        refs: dict[str, set[str]] = {
+            _DATA_DIR: set(),
+            _CHANGE_DIR: set(),
+            _BLOOM_DIR: set(),
+        }
+        for kv in versions:
+            try:
+                entries = self._snapshot_files(kv)
+            except RuntimeError:
+                if strict:
+                    raise
+                entries = []
+            for e in entries:
+                refs[_DATA_DIR].add(e["path"])
                 for st in e["stats"].values():
                     for cst in st.values():
                         ref = cst.get("bloom_ref") if isinstance(cst, dict) else None
                         if ref:
-                            referenced_blooms.add(os.path.dirname(ref["path"]))
-        removed = []
-        now = time.time()
-        for root_dir, ref in (
-            (_DATA_DIR, referenced),
-            (_CHANGE_DIR, referenced_changes),
-            (_BLOOM_DIR, referenced_blooms),
-        ):
+                            refs[_BLOOM_DIR].add(os.path.dirname(ref["path"]))
+            cd = self._manifest(kv).get("change_data")
+            if cd:
+                refs[_CHANGE_DIR].add(cd)
+        out = []
+        for root_dir, ref in refs.items():
             abs_root = os.path.join(self.path, root_dir)
             for d in os.listdir(abs_root) if os.path.isdir(abs_root) else []:
                 rel = os.path.join(root_dir, d)
-                if rel in ref:
-                    continue
-                full = os.path.join(self.path, rel)
-                try:
-                    age = now - os.path.getmtime(full)
-                except OSError:
-                    continue
-                if age < min_age_seconds:
-                    continue  # possibly an in-flight writer's uncommitted dir
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(rel)
-        return removed
+                if rel not in ref:
+                    out.append(rel)
+        return out
 
     # ---------------- delete / update ----------------
 
@@ -1971,49 +1946,10 @@ class LakeTable:
         can only store SQL text; semantics are identical — the property
         is a performance policy, not a semantics switch).
         """
-        mode = self._row_level_mode("delete", mode, predicate)
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown delete mode: {mode!r}")
-        if mode == "merge_on_read":
-            return self._delete_merge_on_read(
-                predicate, partition_filter, return_count, write_change_data
-            )
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        hit = F.coalesce(pred, F.lit(False))
-        base_v = self.current_version()
-        base = self.read(version=base_v)  # raises if the table has no commits
-        if partition_filter is not None:
-            base = base.filter(F.expr(partition_filter))
-        obs = None
-        if return_count:
-            obs = Observation()
-            base = base.observe(
-                obs,
-                F.coalesce(F.sum(hit.cast("long")), F.lit(0)).alias("n_deleted"),
-            )
-        kept = base.filter(~hit)
-        extra = None
-        if write_change_data:
-            # Recompute from a clean read — deriving from ``base`` would
-            # re-trigger its Observation on this side action.
-            src = self.read(version=base_v)
-            if partition_filter is not None:
-                src = src.filter(F.expr(partition_filter))
-            extra = self._write_change_dir(
-                src.filter(hit).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-            )
-        if partition_filter is None:
-            version = self._overwrite_checked(
-                kept, base_v, "delete", extra=extra
-            )
-        else:
-            version = self._commit_partition_scoped(
-                kept, partition_filter, "delete", base_version=base_v,
-                extra=extra,
-            )
-        if not return_count:
-            return version
-        return version, int(obs.get["n_deleted"])
+        return self._rewrite_where(
+            "delete", predicate, None, partition_filter, write_change_data,
+            mode, return_count,
+        )
 
     def set_partitioning(self, partition_by: list[str]) -> int:
         """Iceberg-style PARTITION EVOLUTION: change the partition spec
@@ -2067,62 +2003,6 @@ class LakeTable:
             return "copy_on_write"
         return mode
 
-    def _delete_merge_on_read(
-        self,
-        predicate: str | Column,
-        partition_filter: str | None,
-        return_count: bool,
-        write_change_data: bool,
-    ) -> int | tuple[int, int]:
-        """O(1) predicate delete: commit the predicate as an exclusion
-        on every current file entry (see :meth:`delete_where`). A
-        concurrent append between our snapshot and the commit is ALSO
-        excluded by the rebased build — that is the correct
-        serialization (the append landed first, the predicate delete
-        second, covering it), so no conflict is raised."""
-        if not isinstance(predicate, str):
-            raise ValueError(
-                "merge_on_read DELETE stores the predicate in the "
-                "manifest and requires SQL text; use mode='copy_on_write' "
-                "for a typed Column predicate"
-            )
-        base_v = self.current_version()
-        if base_v is None:
-            raise FileNotFoundError(f"table has no commits: {self.path}")
-        pred = (
-            predicate
-            if partition_filter is None
-            else f"(({partition_filter}) AND ({predicate}))"
-        )
-        base = self.read(version=base_v)
-        # Force analysis NOW: a typo'd predicate must fail THIS delete,
-        # not every future read of the table.
-        base.filter(F.expr(pred)).schema
-        hit = F.coalesce(F.expr(pred), F.lit(False))
-        n_deleted = base.filter(hit).count() if return_count else None
-        extra = None
-        if write_change_data:
-            extra = self._write_change_dir(
-                base.filter(hit).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-            )
-
-        def build(latest: dict | None) -> list[dict]:
-            prior = [_entry(e) for e in latest["files"]] if latest else []
-            for e in prior:
-                _add_exclude(e["excludes"], pred)
-            return prior
-
-        version = self._commit(
-            build,
-            "delete",
-            self._manifest(base_v).get("partition_by", []),
-            delta={"exclude_all": pred},
-            extra=extra,
-        )
-        if not return_count:
-            return version
-        return version, int(n_deleted)
-
     def update_where(
         self,
         predicate: str | Column,
@@ -2157,18 +2037,52 @@ class LakeTable:
         the default when ``mode`` is not passed; see
         :meth:`delete_where` for the property semantics and the typed-
         predicate fallback."""
-        mode = self._row_level_mode("update", mode, predicate)
+        return self._rewrite_where(
+            "update", predicate, set_values, partition_filter,
+            write_change_data, mode, False,
+        )
+
+    def _rewrite_where(
+        self,
+        op: str,
+        predicate: str | Column,
+        set_values: dict[str, Column] | None,
+        partition_filter: str | None,
+        write_change_data: bool,
+        mode: str | None,
+        return_count: bool,
+    ) -> int | tuple[int, int]:
+        """The row-level write behind :meth:`delete_where` (``op`` =
+        ``"delete"``, no ``set_values``) and :meth:`update_where`.
+
+        Copy-on-write rewrites the ``partition_filter`` slice (or the
+        whole table) with the matches dropped or SET, and commits it
+        through the checked :meth:`_commit_rewrite`.
+
+        Merge-on-read commits the predicate (ANDed with
+        ``partition_filter``) as an exclusion on every prior entry and,
+        for an update, one new data dir of the rewritten matches — in a
+        single commit. Delta replay applies ``exclude_all`` BEFORE
+        ``add``, so the new rows are never masked by their own
+        predicate (SET may leave it true: ``SET v = v + 1 WHERE v >
+        5``). A concurrent append between our snapshot and the commit
+        is ALSO excluded by the rebased build — the correct
+        serialization (the append landed first, the predicate write
+        second, covering it), so no conflict is raised."""
+        mode = self._row_level_mode(op, mode, predicate)
         if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown update mode: {mode!r}")
-        if mode == "merge_on_read":
-            return self._update_merge_on_read(
-                predicate, set_values, partition_filter, write_change_data
+            raise ValueError(f"unknown {op} mode: {mode!r}")
+        mor = mode == "merge_on_read"
+        if mor and not isinstance(predicate, str):
+            raise ValueError(
+                f"merge_on_read {op.upper()} stores the predicate in the "
+                "manifest and requires SQL text; use mode='copy_on_write' "
+                "for a typed Column predicate"
             )
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        hit = F.coalesce(pred, F.lit(False))
         base_v = self.current_version()
-        source = self.read(version=base_v)
-        unknown = set(set_values) - set(source.columns)
+        base = self.read(version=base_v)  # raises if the table has no commits
+        cols = base.columns
+        unknown = set(set_values or {}) - set(cols)
         if unknown:
             # SQL/Delta UPDATE raises for an unknown SET column; silently
             # dropping the assignment would be a no-op that LOOKS like a
@@ -2176,108 +2090,112 @@ class LakeTable:
             raise ValueError(
                 f"UPDATE SET columns not in table: {sorted(unknown)}"
             )
-        if partition_filter is not None:
-            source = source.filter(F.expr(partition_filter))
-        updated = source.select(
-            *[
-                F.when(hit, set_values[c]).otherwise(F.col(c)).alias(c)
-                if c in set_values
-                else F.col(c)
-                for c in source.columns
-            ]
+        scope = (
+            base
+            if partition_filter is None
+            else base.filter(F.expr(partition_filter))
         )
-        extra = None
-        if write_change_data:
-            hit_rows = source.filter(hit)
-            pre = hit_rows.withColumn(
-                CHANGE_TYPE_COL, F.lit("update_preimage")
-            )
-            post = hit_rows.select(
+        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        hit = F.coalesce(pred, F.lit(False))
+        hit_rows = scope.filter(hit)
+        post = (
+            None
+            if set_values is None
+            else hit_rows.select(
                 *[
                     set_values[c].alias(c) if c in set_values else F.col(c)
-                    for c in source.columns
+                    for c in cols
                 ]
-            ).withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-            extra = self._write_change_dir(pre.unionByName(post))
-        if partition_filter is None:
-            return self._overwrite_checked(
-                updated, base_v, "update", extra=extra
             )
-        return self._commit_partition_scoped(
-            updated, partition_filter, "update", base_version=base_v,
-            extra=extra,
         )
-
-    def _update_merge_on_read(
-        self,
-        predicate: str | Column,
-        set_values: dict[str, Column],
-        partition_filter: str | None,
-        write_change_data: bool,
-    ) -> int:
-        """O(changed rows) UPDATE (see :meth:`update_where`): exclusion
-        on prior entries + one new data dir of rewritten matches, in a
-        single commit. Delta replay applies ``exclude_all`` BEFORE
-        ``add``, so the new rows are never masked by their own
-        predicate (SET expressions may leave the predicate true —
-        ``SET v = v + 1 WHERE v > 5``). A concurrent append racing this
-        commit gets the exclusion on rebase — the same serialization
-        MoR delete defines (append first, predicate update second)."""
-        if not isinstance(predicate, str):
-            raise ValueError(
-                "merge_on_read UPDATE stores the predicate in the "
-                "manifest and requires SQL text; use mode='copy_on_write' "
-                "for a typed Column predicate"
-            )
-        base_v = self.current_version()
-        if base_v is None:
-            raise FileNotFoundError(f"table has no commits: {self.path}")
-        source = self.read(version=base_v)
-        unknown = set(set_values) - set(source.columns)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET columns not in table: {sorted(unknown)}"
-            )
-        pred = (
-            predicate
-            if partition_filter is None
-            else f"(({partition_filter}) AND ({predicate}))"
-        )
-        # Force analysis NOW: a typo'd predicate must fail THIS update,
-        # not every future read of the table.
-        source.filter(F.expr(pred)).schema
-        hit = F.coalesce(F.expr(pred), F.lit(False))
-        hit_rows = source.filter(hit)
-        updated = hit_rows.select(
-            *[
-                set_values[c].alias(c) if c in set_values else F.col(c)
-                for c in source.columns
-            ]
-        )
-        spec = self._manifest(base_v).get("partition_by", [])
-        new_entry, st = self._write_data_dir(updated, spec)
         extra = None
         if write_change_data:
-            pre = hit_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-            post = updated.withColumn(
-                CHANGE_TYPE_COL, F.lit("update_postimage")
+            extra = self._write_change_dir(
+                hit_rows.withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+                if post is None
+                else hit_rows.withColumn(
+                    CHANGE_TYPE_COL, F.lit("update_preimage")
+                ).unionByName(
+                    post.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
+                )
             )
-            extra = self._write_change_dir(pre.unionByName(post))
 
-        def build(latest: dict | None) -> list[dict]:
-            prior = [_entry(e) for e in latest["files"]] if latest else []
-            for e in prior:
-                _add_exclude(e["excludes"], pred)
-            return prior + [new_entry]
+        if mor:
+            # Force analysis NOW: a typo'd predicate must fail THIS
+            # write, not every future read of the table.
+            hit_rows.schema
+            excl = (
+                predicate
+                if partition_filter is None
+                else f"(({partition_filter}) AND ({predicate}))"
+            )
+            spec = self._manifest(base_v).get("partition_by", [])
+            n_hit = hit_rows.count() if return_count else None
+            delta: dict = {"exclude_all": excl}
+            st = None
+            if post is not None:
+                entry, st = self._write_data_dir(post, spec)
+                delta["add"] = [entry]
 
-        return self._commit(
-            build,
-            "update",
-            spec,
-            delta={"exclude_all": pred, "add": [new_entry]},
-            extra=extra,
-            schema=st,
-        )
+            def build(latest: dict | None) -> list[dict]:
+                prior = [_entry(e) for e in latest["files"]] if latest else []
+                for e in prior:
+                    _add_exclude(e["excludes"], excl)
+                return prior + delta.get("add", [])
+
+            version = self._commit(
+                build, op, spec, delta=delta, extra=extra, schema=st
+            )
+        else:
+            rows = scope
+            if return_count:
+                # the count piggybacks on the rewrite (no extra scan)
+                obs = Observation()
+                rows = scope.observe(
+                    obs,
+                    F.coalesce(F.sum(hit.cast("long")), F.lit(0)).alias("n"),
+                )
+            rewritten = (
+                rows.filter(~hit)
+                if set_values is None
+                else rows.select(
+                    *[
+                        F.when(hit, set_values[c]).otherwise(F.col(c)).alias(c)
+                        if c in set_values
+                        else F.col(c)
+                        for c in cols
+                    ]
+                )
+            )
+            version = self._commit_rewrite(
+                self._optimized_write(rewritten, base_v, partition_filter),
+                base_v,
+                op,
+                partition_filter,
+                extra,
+            )
+            n_hit = int(obs.get["n"]) if return_count else None
+        return (version, n_hit) if return_count else version
+
+    def _optimized_write(
+        self, df: DataFrame, base_v: int, partition_filter: str | None
+    ) -> DataFrame:
+        """Optimized write (Delta optimizeWrite) for a partition-scoped
+        row-level rewrite: shuffle it by the partition columns first,
+        so each hive partition is written by the one task that owns it
+        — one file per touched partition instead of |tasks| ×
+        |partitions| fragments. Measured on the bench MERGE headline:
+        558 files → 16, which un-triggers the distributed-stats path,
+        shrinks the commit manifest, and speeds every later read. Safe
+        because a partition-scoped rewrite is micro-batch + touched-
+        slice sized by contract; a full-table rewrite keeps the
+        caller's layout (a 100 TB rebuild must not funnel each
+        partition through one task), and so does ``compact``, whose
+        layout is its clustering."""
+        spec = self._manifest(base_v).get("partition_by", [])
+        if partition_filter is None or not spec:
+            return df
+        return df.repartition(*spec)
 
     def _filter_may_match_entry(
         self, partition_filter: str, spec: list[str], entry: dict
@@ -2323,131 +2241,82 @@ class LakeTable:
         except Exception:
             return True  # unevaluable predicate: treat as conflicting
 
-    def _commit_partition_scoped(
+    def _commit_rewrite(
         self,
-        rewritten: DataFrame,
-        partition_filter: str,
+        df: DataFrame,
+        base_v: int,
         op: str,
-        base_version: int | None = None,
+        partition_filter: str | None = None,
         extra: dict | None = None,
     ) -> int:
-        """Commit a rewrite of only the ``partition_filter`` slice:
-        prior data dirs stay with the predicate recorded as an
-        exclusion readers prune on (shared by merge/delete/update).
+        """Commit ``df`` as the rewrite of snapshot ``base_v`` (the one
+        it was computed FROM) with conflict DETECTION — the checked
+        commit of every read-modify-write op (merge, copy-on-write
+        delete and update, compact). Plain ``overwrite()`` is last-writer-wins by its
+        atomic-replace contract; a read-modify-write that did the same
+        would silently throw away a concurrent commit.
 
-        ``base_version`` is the snapshot the rewrite was computed FROM;
-        if the log advanced past it with NEW data dirs by commit time,
-        the commit raises :class:`ConcurrentWriteError` instead of
-        excluding rows the rewrite never read (the Delta
-        ConcurrentAppendException contract) — UNLESS every unseen dir
-        is provably disjoint from this rewrite's ``partition_filter``
-        (its hive partition values match none of the filter), in which
-        case both commits land (Delta's partition-level conflict
-        resolution: two merges on disjoint partitions serialize
-        cleanly; overlapping ones conflict)."""
-        v = base_version if base_version is not None else self.current_version()
-        spec = self._manifest(v).get("partition_by", []) if v is not None else []
-        base_paths = (
-            {e["path"] for e in self._snapshot_files(v)}
-            if v is not None
-            else set()
-        )
-        # Optimized write (Delta optimizeWrite): shuffle the rewrite by
-        # the partition columns first, so each hive partition is written
-        # by the one task that owns it — one file per touched partition
-        # instead of |tasks| × |partitions| fragments. Measured on the
-        # bench MERGE headline: 558 files → 16, which un-triggers the
-        # distributed-stats path, shrinks the commit manifest, and
-        # speeds every later read. Safe here because a partition-scoped
-        # rewrite is micro-batch + touched-slice sized by contract; the
-        # full-table overwrite path keeps the caller's layout (a 100 TB
-        # rebuild must not funnel each partition through one task).
-        if spec:
-            rewritten = rewritten.repartition(*[F.col(c) for c in spec])
-        new_entry, st = self._write_data_dir(rewritten, spec)
+        Without ``partition_filter``, ``df`` replaces the whole table
+        (a checkpoint manifest), and any concurrent commit that changed
+        the file set — append, merge, truncate, compact — raises
+        :class:`ConcurrentWriteError`.
+
+        With ``partition_filter``, ``df`` is the rewrite of only that
+        slice: prior data dirs stay with the predicate recorded as an
+        exclusion readers prune on. A dir added since ``base_v`` raises
+        :class:`ConcurrentWriteError` instead of having rows the rewrite
+        never read excluded (the Delta ConcurrentAppendException
+        contract) — UNLESS its hive partition values provably match
+        none of the filter, in which case both commits land (Delta's
+        partition-level conflict resolution: rewrites of disjoint
+        partitions serialize cleanly; overlapping ones conflict)."""
+        spec = self._manifest(base_v).get("partition_by", [])
+        base_paths = {e["path"] for e in self._snapshot_files(base_v)}
+        entry, st = self._write_data_dir(df, spec)
 
         def build(latest: dict | None) -> list[dict]:
             prior = [_entry(e) for e in latest["files"]] if latest else []
             prior_paths = {e["path"] for e in prior}
-            unseen = prior_paths - base_paths
-            if unseen:
-                blockers = sorted(
-                    e["path"]
-                    for e in prior
-                    if e["path"] in unseen
-                    and self._filter_may_match_entry(partition_filter, spec, e)
-                )
-                if blockers:
+            if partition_filter is None:
+                if prior_paths != base_paths:
                     raise ConcurrentWriteError(
-                        f"partition-scoped {op} computed from v{v} raced a "
-                        f"concurrent commit adding {blockers}; retry "
-                        f"against the new snapshot"
+                        f"{op} computed from v{base_v} raced a concurrent "
+                        f"commit (file set changed); retry against the new "
+                        f"snapshot"
                     )
+                return [entry]
+            blockers = sorted(
+                e["path"]
+                for e in prior
+                if e["path"] not in base_paths
+                and self._filter_may_match_entry(partition_filter, spec, e)
+            )
+            if blockers:
+                raise ConcurrentWriteError(
+                    f"partition-scoped {op} computed from v{base_v} raced a "
+                    f"concurrent commit adding {blockers}; retry "
+                    f"against the new snapshot"
+                )
             # dirs the base had that are GONE mean a concurrent
             # truncate/overwrite/compact landed — excluding-and-adding
             # on top would resurrect rows that operation removed.
             missing = base_paths - prior_paths
             if missing:
                 raise ConcurrentWriteError(
-                    f"partition-scoped {op} computed from v{v} raced a "
+                    f"partition-scoped {op} computed from v{base_v} raced a "
                     f"concurrent truncate/replace removing "
                     f"{sorted(missing)}; retry against the new snapshot"
                 )
             for e in prior:
                 _add_exclude(e["excludes"], partition_filter)
-            return prior + [new_entry]
+            return prior + [entry]
 
-        return self._commit(
-            build,
-            op,
-            spec,
-            delta={"exclude_all": partition_filter, "add": [new_entry]},
-            extra=extra,
-            schema=st,
+        delta = (
+            None
+            if partition_filter is None
+            else {"exclude_all": partition_filter, "add": [entry]}
         )
-
-    def _overwrite_checked(
-        self,
-        df: DataFrame,
-        base_version: int | None,
-        op: str,
-        extra: dict | None = None,
-    ) -> int:
-        """Full-table rewrite commit with conflict DETECTION: the new
-        snapshot replaces everything, but only if the log has not moved
-        past ``base_version`` (the snapshot the rewrite was computed
-        from). Any concurrent commit that changed the file set —
-        append, merge, truncate, compact — raises
-        :class:`ConcurrentWriteError` instead of being silently thrown
-        away (the lost-update hole plain ``overwrite`` has by design:
-        last-writer-wins is correct for ``overwrite()``'s atomic-replace
-        contract, but NOT for read-modify-write ops like
-        merge/delete/update)."""
-        base_paths = (
-            {e["path"] for e in self._snapshot_files(base_version)}
-            if base_version is not None
-            else set()
-        )
-        spec = (
-            self._manifest(base_version).get("partition_by", [])
-            if base_version is not None
-            else []
-        )
-        entry, st = self._write_data_dir(df, spec)
-
-        def build(latest: dict | None) -> list[dict]:
-            prior_paths = (
-                {e["path"] for e in latest["files"]} if latest else set()
-            )
-            if prior_paths != base_paths:
-                raise ConcurrentWriteError(
-                    f"{op} computed from v{base_version} raced a concurrent "
-                    f"commit (file set changed); retry against the new "
-                    f"snapshot"
-                )
-            return [entry]
-
-        return self._commit(build, op, spec, extra=extra, schema=st)
+        return self._commit(build, op, spec, delta=delta, extra=extra, schema=st)
 
     # ---------------- merge ----------------
 
@@ -2803,13 +2672,12 @@ class LakeTable:
                 ).unionByName(ct(nmbs_upd_post, "update_postimage"))
             extra = self._write_change_dir(changes)
 
-        if partition_filter is None:
-            return self._overwrite_checked(merged, base_v, "merge", extra=extra)
-
-        # Partition-scoped commit: write only the rewritten slice; prior
-        # dirs stay with the predicate excluded (readers prune it).
-        return self._commit_partition_scoped(
-            merged, partition_filter, "merge", base_version=base_v, extra=extra
+        return self._commit_rewrite(
+            self._optimized_write(merged, base_v, partition_filter),
+            base_v,
+            "merge",
+            partition_filter,
+            extra,
         )
 
 

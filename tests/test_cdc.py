@@ -126,7 +126,7 @@ def test_advance_checkpoint_checked_rewrite(spark, tmp_path, monkeypatch):
 
     # Another writer's advance lands after this one read its base
     # snapshot: the loser raises instead of overwriting the winner.
-    checked = LakeTable._overwrite_checked
+    checked = LakeTable._commit_rewrite
     raced = []
 
     def race_then_commit(self, *a, **k):
@@ -135,7 +135,7 @@ def test_advance_checkpoint_checked_rewrite(spark, tmp_path, monkeypatch):
             jobs._advance_checkpoint(lake, 99)
         return checked(self, *a, **k)
 
-    monkeypatch.setattr(LakeTable, "_overwrite_checked", race_then_commit)
+    monkeypatch.setattr(LakeTable, "_commit_rewrite", race_then_commit)
     with pytest.raises(ConcurrentWriteError):
         jobs._advance_checkpoint(lake, 43)
     assert jobs._last_offset(lake) == 99

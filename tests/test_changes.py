@@ -100,6 +100,29 @@ def test_delete_update_change_feed(spark, tmp_path):
         ("update_preimage", uv, 2, "update_me"),
     ]
 
+    # Copy-on-write count + change data + partition scope together: the
+    # NULL-predicate row and the out-of-scope match are kept, and the
+    # count equals the feed's delete rows.
+    p = LakeTable(spark, str(tmp_path / "p"))
+    p.overwrite(
+        spark.createDataFrame(
+            [(1, 0, 5), (2, 0, None), (3, 0, 1), (4, 1, 1), (5, 0, 2)],
+            "id int, bucket int, v int",
+        ),
+        partition_by=["bucket"],
+    )
+    pv, n = p.delete_where(
+        "v < 3",
+        partition_filter="bucket = 0",
+        return_count=True,
+        write_change_data=True,
+        mode="copy_on_write",
+    )
+    changes = _changes(p, pv, pv, cols=("id",))
+    assert changes == [("delete", pv, 3), ("delete", pv, 5)]
+    assert n == len(changes)
+    assert sorted(r["id"] for r in p.read().collect()) == [1, 2, 4]
+
 
 def test_append_overwrite_truncate_synthesized(spark, tmp_path):
     """Appends/overwrites/truncates need no change files — the feed is

@@ -115,6 +115,29 @@ def test_cluster_by_compaction_enables_skipping(spark, tmp_path):
     assert total == 4 and read == 1
     assert [r["id"] for r in t.read(where=("id", "=", 1234)).collect()] == [1234]
 
+    # A partitioned table compacted in one partition (OPTIMIZE t WHERE
+    # ... ZORDER BY) keeps the clustering: the rewritten partition gets
+    # disjoint-range files, so the new dir prunes.
+    p = _mk(spark, tmp_path, "skip_cluster_scoped")
+    p.overwrite(
+        spark.range(4000)
+        .withColumn("grp", (F.col("id") % 2).cast("int"))
+        .repartition(4),  # round-robin: every file spans the id range
+        partition_by=["grp"],
+    )
+    p.compact(
+        target_partitions=4, cluster_by=["id"], partition_filter="grp = 0"
+    )
+    new_dir = p._snapshot_files(p.current_version())[-1]
+    ranges = sorted(
+        (st["id"]["min"], st["id"]["max"]) for st in new_dir["stats"].values()
+    )
+    assert len(ranges) >= 2
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+    total, read = p.scan_files(("id", "=", 1234))
+    assert read < total
+    assert [r["id"] for r in p.read(where=("id", "=", 1234)).collect()] == [1234]
+
 
 def test_timestamp_boundary_equality_not_pruned(spark, tmp_path):
     """Regression: footer stats are tz-aware, predicate literals naive —

@@ -1,6 +1,7 @@
 """Model-based differential test: a seeded random sequence of table
-operations (append / CoW+MoR delete / CoW+MoR update / truncate /
-compact / restore) runs against BOTH the LakeTable layer and a plain
+operations (append / CoW+MoR delete / CoW+MoR update / merge, the last
+three whole-table or partition-scoped / truncate / compact / restore /
+partition evolution) runs against BOTH the LakeTable layer and a plain
 in-memory Python model; after every step the table's read() must equal
 the model exactly, and time travel must reproduce every recorded
 historical state. One divergence anywhere in the op-interleaving space
@@ -15,6 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from privacy_cdc_lakehouse_spark.tables import LakeTable
+
+
+# partition_filter of the scoped delete / update / merge variants
+SCOPE = "grp = 'a'"
 
 
 def _read_rows(t):
@@ -63,22 +68,38 @@ def _apply_ops(spark, t, seed, n_steps, log):
             log.append((op, rows))
         elif op in ("delete_cow", "delete_mor"):
             cut = rng.randrange(100)
+            scoped = rng.random() < 0.5
             mode = "merge_on_read" if op == "delete_mor" else "copy_on_write"
-            t.delete_where(f"v < {cut}", mode=mode)
-            model = {k: r for k, r in model.items() if not (r[2] < cut)}
-            log.append((op, cut))
+            t.delete_where(
+                f"v < {cut}", partition_filter=SCOPE if scoped else None,
+                mode=mode,
+            )
+            model = {
+                k: r
+                for k, r in model.items()
+                if not (r[2] < cut and (r[1] == "a" or not scoped))
+            }
+            log.append((op, cut, scoped))
         elif op in ("update_cow", "update_mor"):
             cut = rng.randrange(100)
             add = rng.randrange(1, 9)
+            scoped = rng.random() < 0.5
             mode = "merge_on_read" if op == "update_mor" else "copy_on_write"
             t.update_where(
-                f"v >= {cut}", {"v": F.col("v") + add}, mode=mode
+                f"v >= {cut}", {"v": F.col("v") + add},
+                partition_filter=SCOPE if scoped else None, mode=mode,
             )
             model = {
-                k: (r[0], r[1], r[2] + add if r[2] >= cut else r[2])
+                k: (
+                    r[0],
+                    r[1],
+                    r[2] + add
+                    if r[2] >= cut and (r[1] == "a" or not scoped)
+                    else r[2],
+                )
                 for k, r in model.items()
             }
-            log.append((op, cut, add))
+            log.append((op, cut, add, scoped))
         elif op == "compact":
             t.compact(target_partitions=1)
             log.append((op,))
@@ -96,27 +117,28 @@ def _apply_ops(spark, t, seed, n_steps, log):
             model = {r[0]: r for r in rows_then}
             log.append((op, version))
         elif op == "merge":
-            # upsert: touch a mix of existing and new ids
+            # upsert: touch a mix of existing and new ids (a merge into
+            # a truncated, 0-row table works too). A scoped merge keeps
+            # the caller contract: every source row lies in the scope.
+            scoped = rng.random() < 0.5
+            ids = [k for k, r in model.items() if r[1] == "a" or not scoped]
             src = []
-            ids = list(model) or [next_id]
             for _ in range(rng.randrange(1, 4)):
-                if model and rng.random() < 0.5:
+                if ids and rng.random() < 0.5:
                     rid = rng.choice(ids)
                 else:
                     rid, next_id = next_id, next_id + 1
-                row = (rid, rng.choice("ab"), rng.randrange(100))
-                src.append(row)
+                grp = "a" if scoped else rng.choice("ab")
+                src.append((rid, grp, rng.randrange(100)))
             src = list({r[0]: r for r in src}.values())  # unique keys
-            if not model:
-                # merge into a truncated (0-row) table still works
-                pass
             t.merge(
                 spark.createDataFrame(src, "id int, grp string, v int"),
                 keys=["id"],
+                partition_filter=SCOPE if scoped else None,
             )
             for r in src:
                 model[r[0]] = r
-            log.append((op, src))
+            log.append((op, src, scoped))
         elif op == "evolve":
             spec = rng.choice([["grp"], ["v"], []])
             t.set_partitioning(spec)
